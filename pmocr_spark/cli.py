@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import argparse
 import json
+from typing import Callable, NamedTuple
 
 #: supported revision major of config files (LoadConfigFile analog)
 CONFIG_REVISION = "1"
@@ -74,8 +75,18 @@ def load_config(path: str) -> dict:
 
 
 def build_parser() -> argparse.ArgumentParser:
-    p = argparse.ArgumentParser(prog="pmocr-spark")
-    p.add_argument("--config", default=None, help="config file (key=value or JSON); CLI wins")
+    p = argparse.ArgumentParser(
+        prog="pmocr-spark",
+        formatter_class=argparse.RawDescriptionHelpFormatter,
+        epilog="environment:\n"
+        "  PMOCR_RELIABLE_CHECKPOINT=1  iterative work (the --train-bpe merge loop;\n"
+        "      the connected-components, k-means and other iterative catalog\n"
+        "      queries) checkpoints each round with DataFrame.checkpoint() into\n"
+        "      sparkContext's checkpoint dir (HDFS/S3; survives executor loss)\n"
+        "      instead of the default executor-local localCheckpoint().\n"
+        "      Also accepts true/yes.",
+    )
+    p.add_argument("--config", help="config file (key=value or JSON); CLI wins")
     mode = p.add_mutually_exclusive_group()
     mode.add_argument("--batch", action="store_true", help="bounded batch run")
     mode.add_argument(
@@ -85,7 +96,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--blobs", help="media_blobs table (parquet)")
     p.add_argument(
         "--raw",
-        default=None,
         metavar="DIR",
         help="batch mode: ingest a RAW directory tree of media files "
         "(pmOCR's native input, `pmocr.sh --batch -c /some/path`) instead "
@@ -99,14 +109,12 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--lineage", help="checkpoint/lineage table dir")
     p.add_argument(
         "--targets",
-        default=None,
         help="comma list of txt,csv,pdf (pmOCR default: pdf, pmocr.sh:2449-2451; "
         "ours: txt — all targets derive from one OCR pass either way)",
     )
-    p.add_argument("--run-id", default=None)
+    p.add_argument("--run-id")
     p.add_argument(
         "--job-ts",
-        default=None,
         help="fixed job timestamp for output naming/lineage (never wall clock)",
     )
     p.add_argument(
@@ -121,7 +129,6 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument(
         "--filename-addition",
-        default=None,
         help="output-name addition between stem and suffix (pmOCR --text=/"
         "--filename-addition=, pmocr.sh:2316-2321); default: _<job-ts>",
     )
@@ -145,7 +152,6 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument(
         "--metrics",
-        default=None,
         help="per-partition skew report dir: writes checkpoint."
         "partition_metrics over the full lineage table — after each batch "
         "run, or after every epoch in service mode (per-monitor subdirs "
@@ -156,7 +162,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--monitor",
         action="append",
-        default=None,
         metavar="DIR=TARGETS",
         help="repeatable, service mode: per-dir monitor with its own target "
         "set — pmOCR runs one OCR_service subshell per configured dir, each "
@@ -179,7 +184,6 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument(
         "--build-dedup-index",
-        default=None,
         metavar="DIR",
         help="maintenance mode (standalone, like --compact-lineage): "
         "build the banded-MinHash dedup index over --input documents "
@@ -188,7 +192,6 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument(
         "--probe-dedup-index",
-        default=None,
         metavar="DIR",
         help="maintenance mode: probe the --input batch against the "
         "persisted index at DIR (params from its sidecar) and write "
@@ -196,7 +199,6 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument(
         "--merge-dedup-index",
-        default=None,
         metavar="DIR",
         help="maintenance mode: band the --input batch with the index's "
         "persisted params and merge it into DIR append-cheap (no "
@@ -204,7 +206,6 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument(
         "--compact-dedup-index",
-        default=None,
         metavar="DIR",
         help="maintenance mode: re-apply the hot-bucket cap over the "
         "whole index at DIR (the periodic compaction that keeps "
@@ -212,7 +213,6 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument(
         "--build-pq-index",
-        default=None,
         metavar="DIR",
         help="maintenance mode: PQ-encode the --input embeddings table "
         "(vec_id, embedding) and persist codes + codebook sidecar at "
@@ -222,7 +222,6 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument(
         "--append-pq-index",
-        default=None,
         metavar="DIR",
         help="maintenance mode: encode the --input batch against the "
         "index's SIDECAR codebook and append its codes to DIR — "
@@ -231,7 +230,6 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument(
         "--probe-pq-index",
-        default=None,
         metavar="DIR",
         help="maintenance mode: ADC top-k search of the --input query "
         "embeddings against the codes at DIR; writes (query_id, "
@@ -241,7 +239,6 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument(
         "--rerank-vectors",
-        default=None,
         metavar="PATH",
         help="--probe-pq-index: raw embeddings table (the index stores "
         "codes only); the ADC shortlist is reranked by exact cosine "
@@ -250,7 +247,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--pq-topk",
         type=int,
-        default=None,
         help="--probe-pq-index: neighbors per query (default 5 "
         "reranked; shortlist size without --rerank-vectors)",
     )
@@ -259,7 +255,6 @@ def build_parser() -> argparse.ArgumentParser:
         type=int,
         nargs="?",
         const=2,
-        default=None,
         metavar="ITERS",
         help="--build-pq-index: refine the deterministic seed codebook "
         "with ITERS per-subspace Lloyd iterations (default 2) before "
@@ -271,7 +266,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--ivf-nprobe",
         type=int,
-        default=None,
         help="--probe-pq-index: route each query to its N nearest IVF "
         "clusters and ADC-scan ONLY those codes (the FAISS IndexIVFPQ "
         "shape — pair count |queries| x probed clusters, not x corpus). "
@@ -282,7 +276,6 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument(
         "--build-bloom-index",
-        default=None,
         metavar="DIR",
         help="maintenance mode: build the Bloom membership pre-filter "
         "over the --input table's --bloom-key-col content hashes and "
@@ -292,7 +285,6 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument(
         "--append-bloom-index",
-        default=None,
         metavar="DIR",
         help="maintenance mode: add the --input batch's positions to "
         "the filter at DIR (Bloom OR == pure append of position rows; "
@@ -301,7 +293,6 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument(
         "--probe-bloom-index",
-        default=None,
         metavar="DIR",
         help="maintenance mode: membership-test the --input batch "
         "against the filter at DIR; writes the input columns + (n_set, "
@@ -311,7 +302,6 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument(
         "--compact-bloom-index",
-        default=None,
         metavar="DIR",
         help="maintenance mode: rewrite the filter at DIR to distinct "
         "positions (appends accumulate duplicates; compaction makes "
@@ -320,27 +310,23 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--bloom-m",
         type=int,
-        default=None,
         help="--build-bloom-index: filter bits (default 65536; size "
         "with m ~= 9.6n for 1%% FP at n expected members)",
     )
     p.add_argument(
         "--bloom-k",
         type=int,
-        default=None,
         help="--build-bloom-index: hash functions (default 4; 7 pairs "
         "with the 1%% FP sizing)",
     )
     p.add_argument(
         "--bloom-key-col",
-        default=None,
         metavar="COL",
         help="--{build,append,probe}-bloom-index: column whose md5 is "
         "the membership key (default text)",
     )
     p.add_argument(
         "--build-text-index",
-        default=None,
         metavar="DIR",
         help="maintenance mode: build the persisted BM25 inverted index "
         "over the --input documents table at DIR (operators/bm25."
@@ -348,7 +334,6 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument(
         "--append-text-index",
-        default=None,
         metavar="DIR",
         help="maintenance mode: tokenize the --input batch with the "
         "index's sidecar params and append — postings/dl/df are "
@@ -357,7 +342,6 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument(
         "--search-text",
-        default=None,
         metavar="DIR",
         help="maintenance mode: BM25 top-k search of --query against "
         "the index at DIR; writes (query_id, doc_id, rk, score_u) "
@@ -365,14 +349,12 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument(
         "--query",
-        default=None,
         help="--search-text: comma-separated queries, whitespace-"
         "separated terms (lowercased + deduplicated per query, the "
         "index tokenizer's normalization)",
     )
     p.add_argument(
         "--search-phrase",
-        default=None,
         metavar="PHRASES",
         help="maintenance mode (standalone): exact-phrase retrieval "
         "(operators/bm25.phrase_search — positional postings, "
@@ -384,21 +366,18 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--search-topk",
         type=int,
-        default=None,
         help="--search-text / --search-phrase: results per query "
         "(default 5)",
     )
     p.add_argument(
         "--max-df",
         type=float,
-        default=None,
         help="--search-text: drop query terms whose document frequency "
         "exceeds this fraction of the corpus (stop-term cap — bounds "
         "posting-list fan-out on hot terms)",
     )
     p.add_argument(
         "--compact-substr-index",
-        default=None,
         metavar="DIR",
         help="maintenance mode: rewrite the cross-epoch gram index at "
         "DIR (--dedup-substrings-index) to distinct gram hashes — "
@@ -458,7 +437,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--score-quality",
         metavar="MODELDIR",
-        default=None,
         help="maintenance mode (standalone): score the --input flat "
         "documents table under a model trained by --train-quality — "
         "features standardize with the model's TRAINING stats (never "
@@ -538,7 +516,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--layout-files",
         type=int,
-        default=None,
         help="--optimize-layout output file count (default 16)",
     )
     p.add_argument(
@@ -555,7 +532,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--target-file-mb",
         type=int,
-        default=None,
         help="--compact-output target file size in MB (default 128 — "
         "the parquet/HDFS block-sized sweet spot for scan parallelism)",
     )
@@ -627,7 +603,6 @@ def build_parser() -> argparse.ArgumentParser:
         "--keywords",
         metavar="K",
         type=int,
-        default=None,
         help="maintenance mode (standalone): per-document tf-idf "
         "keyword extraction (operators/keywords.py) — the top-K most "
         "distinctive terms of every --input row's --text-col, scored "
@@ -641,14 +616,12 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--keyword-method",
         choices=("tfidf", "rake"),
-        default=None,
         help="scoring method for --keywords (default tfidf)",
     )
     p.add_argument(
         "--collocations",
         metavar="K",
         type=int,
-        default=None,
         help="maintenance mode (standalone): top-K collocations of the "
         "--input table's --text-col by BOTH association statistics — "
         "PMI (Church & Hanks CL'90) and Dunning's log-likelihood ratio "
@@ -659,14 +632,12 @@ def build_parser() -> argparse.ArgumentParser:
         "--colloc-min-count",
         metavar="N",
         type=int,
-        default=None,
         help="minimum bigram count for --collocations (default 10; "
         "PMI is noisy on rare pairs)",
     )
     p.add_argument(
         "--kwic",
         metavar="TERM",
-        default=None,
         help="maintenance mode (standalone): keyword-in-context "
         "concordance (operators/keywords.kwic) — every occurrence of "
         "TERM in the --input table's --text-col with --kwic-window "
@@ -677,7 +648,6 @@ def build_parser() -> argparse.ArgumentParser:
         "--kwic-window",
         metavar="N",
         type=int,
-        default=None,
         help="context window in tokens for --kwic (default 2)",
     )
     p.add_argument(
@@ -706,7 +676,6 @@ def build_parser() -> argparse.ArgumentParser:
         "--winnow-min-shared",
         metavar="N",
         type=int,
-        default=None,
         help="minimum shared distinct fingerprints for a --winnow-dedup "
         "pair (default 2)",
     )
@@ -725,14 +694,12 @@ def build_parser() -> argparse.ArgumentParser:
         "--snm-window",
         metavar="W",
         type=int,
-        default=None,
         help="sorted-neighborhood window size for --snm-dedup (default 4)",
     )
     p.add_argument(
         "--snm-min-jaccard",
         metavar="J",
         type=float,
-        default=None,
         help="verified-Jaccard floor for --snm-dedup pairs (default 0.05)",
     )
     p.add_argument(
@@ -740,7 +707,6 @@ def build_parser() -> argparse.ArgumentParser:
         metavar="N",
         type=int,
         choices=(1, 2),
-        default=None,
         help="multi-pass sorted-neighborhood (Hernández-Stolfo's "
         "refinement): 1 = first-3-token blocking key only (default); "
         "2 = union candidates from an independent LAST-3-token pass, "
@@ -771,7 +737,6 @@ def build_parser() -> argparse.ArgumentParser:
         "--summary-k",
         metavar="K",
         type=int,
-        default=None,
         help="sentences per document for --summarize (default 2)",
     )
     p.add_argument(
@@ -790,7 +755,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--phash-max-hamming",
         type=int,
-        default=None,
         help="--phash-dedup / --afp-dedup pair threshold (default 3 = "
         "the pigeonhole-complete regime; looser values are LSH "
         "best-effort)",
@@ -808,14 +772,12 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--substr-k",
         type=int,
-        default=None,
         help="--dedup-substrings gram width K (default 8): duplicated "
         "spans shorter than K words are not caught",
     )
     p.add_argument(
         "--train-bpe",
         type=int,
-        default=None,
         metavar="N_MERGES",
         help="maintenance mode (standalone): learn up to N_MERGES BPE "
         "merges over the --input documents table (operators/bpe.py, "
@@ -825,13 +787,11 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--bpe-min-count",
         type=int,
-        default=None,
         help="--train-bpe early-stop: stop when the best pair's count "
         "drops below this (default: operators/bpe.py DEFAULT_MIN_COUNT)",
     )
     p.add_argument(
         "--encode-bpe",
-        default=None,
         metavar="MODEL_DIR",
         help="maintenance mode (standalone): tokenize the --input "
         "documents table with the BPE model at MODEL_DIR (from "
@@ -860,7 +820,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--eval-extraction",
         metavar="GOLD_PARQUET",
-        default=None,
         help="maintenance mode (standalone): grade the --input table's "
         "--text-col column against the gold documents table at "
         "GOLD_PARQUET (doc_id, text) — token-level precision/recall/F1 "
@@ -873,7 +832,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--robots-filter",
         metavar="ROBOTS_PARQUET",
-        default=None,
         help="maintenance mode (standalone): RFC 9309 robots.txt URL "
         "admission (operators/robots.py) — evaluate every (host, path) "
         "row of the --input table (a single 'url' column is split "
@@ -885,7 +843,6 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument(
         "--robots-agent",
-        default=None,
         help="--robots-filter user-agent product token (default *)",
     )
     p.add_argument(
@@ -900,13 +857,11 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--pr-iters",
         type=int,
-        default=None,
         help="--pagerank iterations (default 10)",
     )
     p.add_argument(
         "--train-unigram",
         type=int,
-        default=None,
         metavar="VOCAB_SIZE",
         help="maintenance mode (standalone): train a unigram-LM "
         "tokenizer (Kudo ACL'18, the SentencePiece algorithm) of "
@@ -917,7 +872,6 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument(
         "--encode-unigram",
-        default=None,
         metavar="MODEL_DIR",
         help="maintenance mode (standalone): Viterbi-tokenize the "
         "--input documents table with the unigram model at MODEL_DIR "
@@ -927,7 +881,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--probe-broadcast",
         choices=("auto", "force"),
-        default=None,
         help="--probe-dedup-index join strategy: 'auto' (default; no "
         "hint — AQE broadcasts iff the batch is actually small) or "
         "'force' (hint the broadcast; only for batches KNOWN to fit "
@@ -945,7 +898,6 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument(
         "--engine",
-        default=None,
         help="OCR engine adapter (pmOCR OCR_ENGINE, pmocr.sh:1825-1852): "
         "'codec' (default; the deterministic synthetic codec — the only "
         "oracle-checkable engine) or 'tesseract' (real OCR via "
@@ -957,7 +909,6 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument(
         "--dedup-index",
-        default=None,
         metavar="DIR",
         help="service mode: cross-epoch near-dup suppression — each "
         "epoch's extracted docs are probed against the persisted "
@@ -968,7 +919,6 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument(
         "--dedup-substrings-index",
-        default=None,
         metavar="DIR",
         help="service mode: cross-epoch substring dedup — each epoch's "
         "extracted txt is stripped of duplicated >= k-word spans, both "
@@ -978,13 +928,12 @@ def build_parser() -> argparse.ArgumentParser:
         "txt_clean/words_removed columns. Per-monitor subdirs with "
         "--monitor. Batch corpora use the standalone --dedup-substrings.",
     )
-    p.add_argument("--alerts", default=None, help="alert table dir (S7; service mode)")
-    p.add_argument("--stream-checkpoint", default=None, help="streaming offsets dir (service)")
-    p.add_argument("--master", default=None, help="override spark master (default from env)")
-    p.add_argument("--num-partitions", type=int, default=None)
+    p.add_argument("--alerts", help="alert table dir (S7; service mode)")
+    p.add_argument("--stream-checkpoint", help="streaming offsets dir (service)")
+    p.add_argument("--master", help="override spark master (default from env)")
+    p.add_argument("--num-partitions", type=int)
     p.add_argument(
         "--partition-by",
-        default=None,
         help="comma-separated result columns to Hive-partition the batch "
         "results sink by (e.g. --partition-by status): failed docs land "
         "in their own status=failed/ subdirectory (the S6 quarantine "
@@ -995,7 +944,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--span-join",
         choices=("broadcast", "shuffle"),
-        default=None,
         help="media-span/blob join strategy: 'broadcast' (default) keeps "
         "blob bytes in place and broadcasts the span side — right while "
         "the per-batch span set fits a broadcast; 'shuffle' is the "
@@ -1006,8 +954,9 @@ def build_parser() -> argparse.ArgumentParser:
 
 
 #: built-in defaults, applied below config and CLI (lowest precedence).
-#: NOTE: every argparse option that appears here must use default=None in
-#: build_parser — a truthy argparse default would mask config values.
+#: NOTE: every argparse option that appears here must keep argparse's None
+#: default in build_parser — a truthy argparse default would mask config
+#: values.
 _DEFAULTS = {
     "targets": "txt",
     "run_id": "run-0",
@@ -1071,8 +1020,63 @@ def _parse_monitor_specs(value) -> list[tuple[str, str]]:
     return specs
 
 
+# ---------------------------------------------------------------- mode table
+#
+# Every CLI mode is one Mode entry in MODES; parse_args and main drive
+# them all with the same code. A new mode is a run function plus one
+# entry: its trigger flag, the knobs it owns, the paths it needs, the
+# columns its input must carry and its range checks.
+
+#: Mode.cols placeholder for the column named by --text-col
+TEXT = "--text-col"
+
+
+class Mode(NamedTuple):
+    """One CLI mode: its trigger flag, its contract, and its run.
+
+    run(spark, args, table) gets `table` = the `reads` path read as
+    parquet (None without `reads`) and returns the summary line, None,
+    or (DataFrame, summary): the driver then overwrites --output with
+    the DataFrame as parquet and summary(re-read output) gives the line.
+    Knobs in `owns` are rejected whenever another mode runs."""
+
+    flag: str
+    run: Callable
+    needs: tuple = ()  # dests that must be set
+    reads: str | None = None  # path dest read as the run's input table
+    cols: tuple = ()  # columns the input table must carry
+    owns: tuple = ()  # knob dests that apply to this mode only
+    checks: tuple = ()  # (ok(args), message) range checks
+    session: bool = True  # False: run gets spark=None, no JVM starts
+    prepare: Callable | None = None  # prepare(parser, args): extra validation
+
+    @property
+    def dest(self) -> str:
+        return self.flag[2:].replace("-", "_")
+
+
+def _flag(dest: str) -> str:
+    return "--" + dest.replace("_", "-")
+
+
+def _at_least(dest: str, lo, what: str = ""):
+    return (
+        lambda a: getattr(a, dest) is None or getattr(a, dest) >= lo,
+        f"{_flag(dest)}{what} must be >= {lo}",
+    )
+
+
+def _within(dest: str, lo, hi):
+    return (
+        lambda a: getattr(a, dest) is None or lo <= getattr(a, dest) <= hi,
+        f"{_flag(dest)} must be in [{lo}, {hi}]",
+    )
+
+
 def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
-    """Three-layer precedence: built-in defaults < config file < CLI."""
+    """Three-layer precedence: built-in defaults < config file < CLI.
+    Then the mode table's contract: exactly one mode, no knob outside
+    the modes that own it, required paths, range checks."""
     parser = build_parser()
     args = parser.parse_args(argv)
     layered = dict(_DEFAULTS)
@@ -1101,628 +1105,89 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
         a.dest for a in parser._actions if isinstance(a.const, bool) or isinstance(a.default, bool)
     }
     for k, v in layered.items():
-        cur = getattr(args, k, None)
+        cur = getattr(args, k)
         if cur is None or (k in flag_dests and cur is False):
             setattr(args, k, v)
-    # maintenance mode: --compact-lineage alone (no --batch/--service)
-    # compacts the lineage table and exits — the way to compact a
-    # STOPPED stream's lineage without running any pipeline
-    args.compact_only = args.compact_lineage and not (args.batch or args.service)
-    # standalone maintenance modes are mutually exclusive — checked ONCE
-    # before any mode's early return, so no combination is silently
-    # swallowed by whichever mode happens to dispatch first
-    _dedup_index_flags = [
-        f"--{op}-dedup-index"
-        for op in ("build", "probe", "merge", "compact")
-        if getattr(args, f"{op}_dedup_index")
-    ]
-    _pq_index_flags = [
-        f"--{op}-pq-index"
-        for op in ("build", "append", "probe")
-        if getattr(args, f"{op}_pq_index")
-    ]
-    _text_index_flags = [
-        flag
-        for flag, on in (
-            ("--build-text-index", args.build_text_index),
-            ("--append-text-index", args.append_text_index),
-            ("--search-text", args.search_text),
-            ("--search-phrase", bool(args.search_phrase)),
-        )
-        if on
-    ]
-    _bloom_index_flags = [
-        f"--{op}-bloom-index"
-        for op in ("build", "append", "probe", "compact")
-        if getattr(args, f"{op}_bloom_index")
-    ]
-    _maint = _dedup_index_flags + _pq_index_flags + _text_index_flags + _bloom_index_flags + [
-        flag
-        for flag, on in (
-            ("--compact-lineage", args.compact_only),
-            ("--dedup-substrings", args.dedup_substrings),
-            ("--compact-substr-index", args.compact_substr_index),
-            ("--phash-dedup", args.phash_dedup),
-            ("--afp-dedup", args.afp_dedup),
-            ("--transcribe-audio", args.transcribe_audio),
-            ("--transcribe-video", args.transcribe_video),
-            ("--extract-markdown", args.extract_markdown),
-            ("--word-boxes", args.word_boxes),
-            ("--fix-text", args.fix_text),
-            ("--spell-fix", args.spell_fix),
-            ("--keywords", args.keywords is not None),
-            ("--collocations", args.collocations is not None),
-            ("--kwic", args.kwic is not None),
-            ("--srp-dedup", args.srp_dedup),
-            ("--winnow-dedup", args.winnow_dedup),
-            ("--snm-dedup", args.snm_dedup),
-            ("--compress-postings", args.compress_postings),
-            ("--summarize", args.summarize),
-            ("--audit-blobs", args.audit_blobs),
-            ("--corpus-stats", args.corpus_stats),
-            ("--train-quality", args.train_quality),
-            ("--score-quality", args.score_quality is not None),
-            ("--train-bpe", args.train_bpe is not None),
-            ("--encode-bpe", bool(args.encode_bpe)),
-            ("--train-unigram", args.train_unigram is not None),
-            ("--encode-unigram", bool(args.encode_unigram)),
-            ("--extract-links", args.extract_links),
-            ("--pagerank", args.pagerank),
-            ("--robots-filter", bool(args.robots_filter)),
-            ("--eval-extraction", bool(args.eval_extraction)),
-            ("--warc-cdx", args.warc_cdx),
-            ("--lsh-plan", bool(args.lsh_plan)),
-            ("--optimize-layout", bool(args.optimize_layout)),
-            ("--compact-output", args.compact_output),
-        )
-        if on
-    ]
-    if len(_maint) > 1:
-        parser.error(f"{' and '.join(_maint)} are separate maintenance modes")
-    # checked BEFORE any mode's early return (same reason as _maint):
-    # --compact-lineage etc. must not silently swallow a train-bpe knob
-    if args.bpe_min_count is not None and args.train_bpe is None:
-        parser.error("--bpe-min-count only applies to --train-bpe")
-    if args.colloc_min_count is not None and args.collocations is None:
-        parser.error("--colloc-min-count only applies to --collocations")
-    if args.winnow_min_shared is not None and not args.winnow_dedup:
-        parser.error("--winnow-min-shared only applies to --winnow-dedup")
-    if args.summary_k is not None and not args.summarize:
-        parser.error("--summary-k only applies to --summarize")
-    # round-6 ADVICE fix: these two misuse checks previously sat BELOW
-    # earlier maintenance-mode branches that `return args`, so e.g.
-    # `--spell-fix --keyword-method rake` silently ignored the stray
-    # flag; eager like the winnow/summary checks above.
-    if args.keyword_method is not None and args.keywords is None:
-        parser.error("--keyword-method only applies to --keywords")
-    if (
-        args.snm_window is not None
-        or args.snm_min_jaccard is not None
-        or args.snm_passes is not None
-    ) and not args.snm_dedup:
+    # "set" = differs from the built-in default, from the CLI or a config
+    default = {a.dest: a.default for a in parser._actions} | _DEFAULTS
+
+    def is_set(dest: str) -> bool:
+        return getattr(args, dest) != default[dest]
+
+    on = [m for m in MODES if is_set(m.dest)]
+    # a trigger that another active mode owns is that mode's knob
+    # (--batch --compact-lineage compacts after the run)
+    on = [m for m in on if not any(m.dest in o.owns for o in on)]
+    if len(on) > 1:
         parser.error(
-            "--snm-window/--snm-min-jaccard/--snm-passes only apply to --snm-dedup"
+            f"{' and '.join(m.flag for m in on)} are separate modes "
+            "(maintenance modes run standalone, without --batch/--service)"
         )
-    if args.kwic_window is not None and args.kwic is None:
-        parser.error("--kwic-window only applies to --kwic")
-    if getattr(args, "hocr", False) and not args.word_boxes:
-        parser.error("--hocr requires --word-boxes")
-    if getattr(args, "tables", False) and not args.word_boxes:
-        parser.error("--tables requires --word-boxes")
-    if getattr(args, "layout", False) and not args.word_boxes:
-        parser.error("--layout requires --word-boxes")
-    if (
-        sum(bool(getattr(args, f, False)) for f in ("tables", "hocr", "layout"))
-        > 1
-    ):
-        parser.error("--tables, --hocr and --layout are mutually exclusive outputs")
-    if args.pr_iters is not None and not args.pagerank:
-        parser.error("--pr-iters only applies to --pagerank")
-    if (
-        args.bloom_m is not None or args.bloom_k is not None or args.bloom_key_col
-    ) and not _bloom_index_flags:
-        parser.error(
-            "--bloom-m/--bloom-k/--bloom-key-col only apply to the "
-            "--{build,append,probe}-bloom-index maintenance modes"
-        )
-    if args.search_phrase:
-        if args.batch or args.service:
-            parser.error("--search-phrase is a standalone maintenance mode")
-        if not args.input or not args.output:
-            parser.error("--input and --output are required with --search-phrase")
-        if args.search_topk is not None and args.search_topk < 1:
-            parser.error("--search-topk must be >= 1")
-        args.target_list = []
-        args.monitor_list = []
-        return args
-    if (args.query or args.max_df is not None) and not args.search_text:
-        parser.error("--query/--max-df only apply to --search-text")
-    if args.search_topk is not None and not args.search_text:
-        parser.error("--search-topk only applies to --search-text/--search-phrase")
-    if args.compact_only:
-        if not args.lineage:
-            parser.error("--lineage is required with --compact-lineage")
-        args.target_list = []
-        args.monitor_list = []
-        return args
-    # dedup-index maintenance modes (standalone, like --compact-lineage):
-    # build / probe / merge / compact against a persisted index dir
-    dedup_ops = [
-        (op, getattr(args, f"{op}_dedup_index"))
-        for op in ("build", "probe", "merge", "compact")
-        if getattr(args, f"{op}_dedup_index")
-    ]
-    if len(dedup_ops) > 1:
-        parser.error("give exactly one --{build,probe,merge,compact}-dedup-index")
-    args.dedup_index_op = dedup_ops[0] if dedup_ops else None
-    if args.dedup_index_op:
-        op, _dir = args.dedup_index_op
-        if args.batch or args.service:
-            parser.error(f"--{op}-dedup-index is a standalone maintenance mode")
-        if op in ("build", "probe", "merge") and not args.input:
-            parser.error(f"--input is required with --{op}-dedup-index")
-        if op == "probe" and not args.output:
-            parser.error("--output is required with --probe-dedup-index")
-        args.target_list = []
-        args.monitor_list = []
-        return args
-    # PQ-index maintenance modes (same standalone contract)
-    pq_ops = [
-        (op, getattr(args, f"{op}_pq_index"))
-        for op in ("build", "append", "probe")
-        if getattr(args, f"{op}_pq_index")
-    ]
-    if len(pq_ops) > 1:
-        parser.error("give exactly one --{build,append,probe}-pq-index")
-    args.pq_index_op = pq_ops[0] if pq_ops else None
-    if args.pq_index_op:
-        op, _dir = args.pq_index_op
-        if args.batch or args.service:
-            parser.error(f"--{op}-pq-index is a standalone maintenance mode")
-        if not args.input:
-            parser.error(f"--input is required with --{op}-pq-index")
-        if op == "probe" and not args.output:
-            parser.error("--output is required with --probe-pq-index")
-        if op != "build" and args.train_codebook is not None:
-            parser.error("--train-codebook only applies to --build-pq-index")
-        if op != "probe" and (
-            args.rerank_vectors or args.pq_topk is not None or args.ivf_nprobe is not None
-        ):
-            # would otherwise be SILENTLY dropped by this early return —
-            # a user who "built a rerank-enabled index" must hear that
-            # rerank/routing width are probe-time choices, not index
-            # properties (the index property is the per-code cluster id,
-            # which build persists unconditionally)
-            parser.error(
-                "--rerank-vectors/--pq-topk/--ivf-nprobe only apply to --probe-pq-index"
-            )
-        if args.pq_topk is not None and args.pq_topk < 1:
-            parser.error("--pq-topk must be >= 1")
-        if args.ivf_nprobe is not None and args.ivf_nprobe < 1:
-            parser.error("--ivf-nprobe must be >= 1")
-        if args.train_codebook is not None and args.train_codebook < 1:
-            # range(0)/range(-k) would silently train nothing while the
-            # summary line claims a Lloyd-trained codebook
-            parser.error("--train-codebook ITERS must be >= 1")
-        args.target_list = []
-        args.monitor_list = []
-        return args
-    if args.rerank_vectors or args.ivf_nprobe is not None:
-        parser.error("--rerank-vectors/--ivf-nprobe only apply to --probe-pq-index")
-    if args.train_codebook is not None:
-        parser.error("--train-codebook only applies to --build-pq-index")
-    # Bloom-index maintenance modes (same standalone contract)
-    bloom_ops = [
-        (op, getattr(args, f"{op}_bloom_index"))
-        for op in ("build", "append", "probe", "compact")
-        if getattr(args, f"{op}_bloom_index")
-    ]
-    if len(bloom_ops) > 1:
-        parser.error("give exactly one --{build,append,probe,compact}-bloom-index")
-    args.bloom_index_op = bloom_ops[0] if bloom_ops else None
-    if args.bloom_index_op:
-        op, _dir = args.bloom_index_op
-        if args.batch or args.service:
-            parser.error(f"--{op}-bloom-index is a standalone maintenance mode")
-        if op in ("build", "append", "probe") and not args.input:
-            parser.error(f"--input is required with --{op}-bloom-index")
-        if op == "probe" and not args.output:
-            parser.error("--output is required with --probe-bloom-index")
-        if op != "build" and (args.bloom_m is not None or args.bloom_k is not None):
-            # geometry is an index property persisted at build time —
-            # appends/probes read it from the sidecar; a flag here would
-            # otherwise be silently dropped by this early return
-            parser.error("--bloom-m/--bloom-k only apply to --build-bloom-index")
-        if args.bloom_m is not None and args.bloom_m < 2:
-            parser.error("--bloom-m must be >= 2")
-        if args.bloom_k is not None and args.bloom_k < 1:
-            parser.error("--bloom-k must be >= 1")
-        if args.bloom_key_col is not None and op == "compact":
-            parser.error("--bloom-key-col does not apply to --compact-bloom-index")
-        args.target_list = []
-        args.monitor_list = []
-        return args
-    # BM25 text-index maintenance modes (same standalone contract)
-    text_ops = [
-        (op, d)
-        for op, d in (
-            ("build", args.build_text_index),
-            ("append", args.append_text_index),
-            ("search", args.search_text),
-        )
-        if d
-    ]
-    if len(text_ops) > 1:
-        parser.error("give exactly one --{build,append}-text-index / --search-text")
-    args.text_index_op = text_ops[0] if text_ops else None
-    if args.text_index_op:
-        op, _dir = args.text_index_op
-        if args.batch or args.service:
-            mode = "--search-text" if op == "search" else f"--{op}-text-index"
-            parser.error(f"{mode} is a standalone maintenance mode")
-        if op in ("build", "append") and not args.input:
-            parser.error(f"--input is required with --{op}-text-index")
-        if op == "search":
-            if not args.query:
-                parser.error("--query is required with --search-text")
-            if not args.output:
-                parser.error("--output is required with --search-text")
-        if args.search_topk is not None and args.search_topk < 1:
-            parser.error("--search-topk must be >= 1")
-        if args.max_df is not None and not (0 < args.max_df <= 1):
-            parser.error("--max-df must be in (0, 1]")
-        args.target_list = []
-        args.monitor_list = []
-        return args
-    if args.compact_substr_index:
-        if args.batch or args.service:
-            parser.error("--compact-substr-index is a standalone maintenance mode")
-        args.target_list = []
-        args.monitor_list = []
-        return args
-    if args.phash_dedup:
-        if args.batch or args.service:
-            parser.error("--phash-dedup is a standalone maintenance mode")
-        if not args.blobs or not args.output:
-            parser.error("--blobs and --output are required with --phash-dedup")
-        if args.phash_max_hamming is not None and not (0 <= args.phash_max_hamming <= 64):
-            parser.error("--phash-max-hamming must be in [0, 64]")
-        args.target_list = []
-        args.monitor_list = []
-        return args
-    if args.afp_dedup:
-        if args.batch or args.service:
-            parser.error("--afp-dedup is a standalone maintenance mode")
-        if not args.blobs or not args.output:
-            parser.error("--blobs and --output are required with --afp-dedup")
-        if args.phash_max_hamming is not None and not (0 <= args.phash_max_hamming <= 64):
-            parser.error("--phash-max-hamming must be in [0, 64]")
-        args.target_list = []
-        args.monitor_list = []
-        return args
-    if args.transcribe_audio:
-        if args.batch or args.service:
-            parser.error("--transcribe-audio is a standalone maintenance mode")
-        if not args.blobs or not args.output:
-            parser.error("--blobs and --output are required with --transcribe-audio")
-        args.target_list = []
-        args.monitor_list = []
-        return args
-    if args.transcribe_video:
-        if args.batch or args.service:
-            parser.error("--transcribe-video is a standalone maintenance mode")
-        if not args.blobs or not args.output:
-            parser.error("--blobs and --output are required with --transcribe-video")
-        args.target_list = []
-        args.monitor_list = []
-        return args
-    if args.extract_markdown:
-        if args.batch or args.service:
-            parser.error("--extract-markdown is a standalone maintenance mode")
-        if not args.blobs or not args.output:
-            parser.error("--blobs and --output are required with --extract-markdown")
-        args.target_list = []
-        args.monitor_list = []
-        return args
-    if args.word_boxes:
-        if args.batch or args.service:
-            parser.error("--word-boxes is a standalone maintenance mode")
-        if not args.blobs or not args.output:
-            parser.error("--blobs and --output are required with --word-boxes")
-        args.target_list = []
-        args.monitor_list = []
-        return args
-    if args.corpus_stats:
-        if args.batch or args.service:
-            parser.error("--corpus-stats is a standalone maintenance mode")
-        if not args.input or not args.output:
-            parser.error("--input and --output are required with --corpus-stats")
-        args.target_list = []
-        args.monitor_list = []
-        return args
-    if args.audit_blobs:
-        if args.batch or args.service:
-            parser.error("--audit-blobs is a standalone maintenance mode")
-        if not args.blobs or not args.output:
-            parser.error("--blobs and --output are required with --audit-blobs")
-        args.target_list = []
-        args.monitor_list = []
-        return args
-    if args.fix_text:
-        if args.batch or args.service:
-            parser.error("--fix-text is a standalone maintenance mode")
-        if not args.input or not args.output:
-            parser.error("--input and --output are required with --fix-text")
-        args.target_list = []
-        args.monitor_list = []
-        return args
-    if args.spell_fix:
-        if args.batch or args.service:
-            parser.error("--spell-fix is a standalone maintenance mode")
-        if not args.input or not args.output:
-            parser.error("--input and --output are required with --spell-fix")
-        args.target_list = []
-        args.monitor_list = []
-        return args
-    if args.keywords is not None:
-        if args.batch or args.service:
-            parser.error("--keywords is a standalone maintenance mode")
-        if not args.input or not args.output:
-            parser.error("--input and --output are required with --keywords")
-        if args.keywords < 1:
-            parser.error("--keywords K must be >= 1")
-        args.target_list = []
-        args.monitor_list = []
-        return args
-    if args.collocations is not None:
-        if args.batch or args.service:
-            parser.error("--collocations is a standalone maintenance mode")
-        if not args.input or not args.output:
-            parser.error("--input and --output are required with --collocations")
-        if args.collocations < 1:
-            parser.error("--collocations K must be >= 1")
-        if args.colloc_min_count is not None and args.colloc_min_count < 1:
-            parser.error("--colloc-min-count must be >= 1")
-        args.target_list = []
-        args.monitor_list = []
-        return args
-    if args.kwic is not None:
-        if args.batch or args.service:
-            parser.error("--kwic is a standalone maintenance mode")
-        if not args.input or not args.output:
-            parser.error("--input and --output are required with --kwic")
-        if not args.kwic.strip():
-            parser.error("--kwic TERM must be non-empty")
-        if args.kwic_window is not None and args.kwic_window < 0:
-            parser.error("--kwic-window must be >= 0")
-        args.target_list = []
-        args.monitor_list = []
-        return args
-    if args.srp_dedup:
-        if args.batch or args.service:
-            parser.error("--srp-dedup is a standalone maintenance mode")
-        if not args.input or not args.output:
-            parser.error("--input and --output are required with --srp-dedup")
-        if args.phash_max_hamming is not None and not (
-            0 <= args.phash_max_hamming <= 64
-        ):
-            parser.error("--phash-max-hamming must be in 0..64")
-        args.target_list = []
-        args.monitor_list = []
-        return args
-    if args.winnow_dedup:
-        if args.batch or args.service:
-            parser.error("--winnow-dedup is a standalone maintenance mode")
-        if not args.input or not args.output:
-            parser.error("--input and --output are required with --winnow-dedup")
-        if args.winnow_min_shared is not None and args.winnow_min_shared < 1:
-            parser.error("--winnow-min-shared must be >= 1")
-        args.target_list = []
-        args.monitor_list = []
-        return args
-    if args.snm_dedup:
-        if args.batch or args.service:
-            parser.error("--snm-dedup is a standalone maintenance mode")
-        if not args.input or not args.output:
-            parser.error("--input and --output are required with --snm-dedup")
-        if args.snm_window is not None and args.snm_window < 2:
-            parser.error("--snm-window must be >= 2")
-        if args.snm_min_jaccard is not None and not (
-            0.0 <= args.snm_min_jaccard <= 1.0
-        ):
-            parser.error("--snm-min-jaccard must be in [0, 1]")
-        args.target_list = []
-        args.monitor_list = []
-        return args
-    if args.compress_postings:
-        if args.batch or args.service:
-            parser.error("--compress-postings is a standalone maintenance mode")
-        if not args.input or not args.output:
-            parser.error("--input and --output are required with --compress-postings")
-        args.target_list = []
-        args.monitor_list = []
-        return args
-    if args.summarize:
-        if args.batch or args.service:
-            parser.error("--summarize is a standalone maintenance mode")
-        if not args.input or not args.output:
-            parser.error("--input and --output are required with --summarize")
-        if args.summary_k is not None and args.summary_k < 1:
-            parser.error("--summary-k must be >= 1")
-        args.target_list = []
-        args.monitor_list = []
-        return args
-    if args.train_quality or args.score_quality:
-        mode = "--train-quality" if args.train_quality else "--score-quality"
-        if args.batch or args.service:
-            parser.error(f"{mode} is a standalone maintenance mode")
-        if not args.input or not args.output:
-            parser.error(f"--input and --output are required with {mode}")
-        args.target_list = []
-        args.monitor_list = []
-        return args
-    if args.train_bpe is not None:
-        if args.batch or args.service:
-            parser.error("--train-bpe is a standalone maintenance mode")
-        if args.train_bpe < 1:
-            parser.error("--train-bpe must be >= 1 merges")
-        if args.bpe_min_count is not None and args.bpe_min_count < 1:
-            parser.error("--bpe-min-count must be >= 1")
-        if not args.input or not args.output:
-            parser.error("--input and --output are required with --train-bpe")
-        args.target_list = []
-        args.monitor_list = []
-        return args
-    if args.encode_bpe:
-        if args.batch or args.service:
-            parser.error("--encode-bpe is a standalone maintenance mode")
-        if not args.input or not args.output:
-            parser.error("--input and --output are required with --encode-bpe")
-        args.target_list = []
-        args.monitor_list = []
-        return args
-    if args.warc_cdx:
-        if args.batch or args.service:
-            parser.error("--warc-cdx is a standalone maintenance mode")
-        if not args.input or not args.output:
-            parser.error("--input and --output are required with --warc-cdx")
-        args.target_list = []
-        args.monitor_list = []
-        return args
-    if args.extract_links:
-        if args.batch or args.service:
-            parser.error("--extract-links is a standalone maintenance mode")
-        if not args.blobs or not args.output:
-            parser.error("--blobs and --output are required with --extract-links")
-        args.target_list = []
-        args.monitor_list = []
-        return args
-    if args.robots_filter:
-        if args.batch or args.service:
-            parser.error("--robots-filter is a standalone maintenance mode")
-        if not args.input or not args.output:
-            parser.error("--input and --output are required with --robots-filter")
-        args.target_list = []
-        args.monitor_list = []
-        return args
-    if args.eval_extraction:
-        if args.batch or args.service:
-            parser.error("--eval-extraction is a standalone maintenance mode")
-        if not args.input or not args.output:
-            parser.error("--input and --output are required with --eval-extraction")
-        args.target_list = []
-        args.monitor_list = []
-        return args
-    if args.robots_agent is not None and not args.robots_filter:
-        parser.error("--robots-agent only applies to --robots-filter")
-    if args.pagerank:
-        if args.batch or args.service:
-            parser.error("--pagerank is a standalone maintenance mode")
-        if not args.input or not args.output:
-            parser.error("--input and --output are required with --pagerank")
-        if args.pr_iters is not None and args.pr_iters < 1:
-            parser.error("--pr-iters must be >= 1")
-        args.target_list = []
-        args.monitor_list = []
-        return args
-    if args.train_unigram is not None:
-        if args.batch or args.service:
-            parser.error("--train-unigram is a standalone maintenance mode")
-        if args.train_unigram < 1:
-            parser.error("--train-unigram VOCAB_SIZE must be >= 1")
-        if not args.input or not args.output:
-            parser.error("--input and --output are required with --train-unigram")
-        args.target_list = []
-        args.monitor_list = []
-        return args
-    if args.encode_unigram:
-        if args.batch or args.service:
-            parser.error("--encode-unigram is a standalone maintenance mode")
-        if not args.input or not args.output:
-            parser.error("--input and --output are required with --encode-unigram")
-        args.target_list = []
-        args.monitor_list = []
-        return args
-    if args.dedup_substrings:
-        if args.batch or args.service:
-            parser.error("--dedup-substrings is a standalone maintenance mode")
-        if not args.input or not args.output:
-            parser.error("--input and --output are required with --dedup-substrings")
-        if args.substr_k is not None and args.substr_k < 2:
-            parser.error("--substr-k must be >= 2")
-        args.target_list = []
-        args.monitor_list = []
-        return args
-    if args.lsh_plan:
-        if args.batch or args.service:
-            parser.error("--lsh-plan is a standalone maintenance mode")
-        args.target_list = []
-        args.monitor_list = []
-        return args
-    if args.optimize_layout:
-        if args.batch or args.service:
-            parser.error("--optimize-layout is a standalone maintenance mode")
-        if not args.input or not args.output:
-            parser.error("--input and --output are required with --optimize-layout")
-        if len([c for c in args.optimize_layout.split(",") if c.strip()]) != 2:
-            parser.error("--optimize-layout wants exactly two columns: COL_A,COL_B")
-        if args.layout_files is not None and args.layout_files < 1:
-            parser.error("--layout-files must be >= 1")
-        args.target_list = []
-        args.monitor_list = []
-        return args
-    if args.layout_files is not None:
-        parser.error("--layout-files only applies to --optimize-layout")
-    if args.compact_output:
-        if args.batch or args.service:
-            parser.error("--compact-output is a standalone maintenance mode")
-        if not args.input or not args.output:
-            parser.error("--input and --output are required with --compact-output")
-        if args.target_file_mb is not None and args.target_file_mb < 1:
-            parser.error("--target-file-mb must be >= 1")
-        args.target_list = []
-        args.monitor_list = []
-        return args
-    if args.target_file_mb is not None:
-        parser.error("--target-file-mb only applies to --compact-output")
-    if not (args.batch or args.service):
+    mode = on[0] if on else None
+    # a knob set outside every mode that owns it is an error, never
+    # silently dropped (also when no mode is given at all)
+    for a in parser._actions:
+        owners = [m.flag for m in MODES if a.dest in m.owns]
+        if owners and is_set(a.dest) and (mode is None or a.dest not in (mode.dest, *mode.owns)):
+            parser.error(f"{_flag(a.dest)} only applies to {'/'.join(owners)}")
+    if mode is None:
         parser.error("one of --batch / --service is required (flag or config)")
-    if args.batch and args.service:
-        parser.error("--batch and --service are mutually exclusive")
-    if args.service and args.compact_lineage:
+    if any(not getattr(args, d) for d in mode.needs):
         parser.error(
-            "--compact-lineage cannot run under --service: compacting a "
-            "LIVE stream's lineage loses retry history on crash-replay "
-            "of an old epoch — stop the stream, then run "
-            "--compact-lineage --lineage DIR standalone"
+            f"{' and '.join(map(_flag, mode.needs))} "
+            f"{'is' if len(mode.needs) == 1 else 'are'} required with {mode.flag}"
         )
-    if args.monitor and not args.service:
-        parser.error("--monitor requires --service (pmOCR's per-dir OCR_service)")
-    if args.once and not args.service:
-        parser.error("--once is a service-mode reconciliation pass (W4); use with --service")
-    if args.dedup_index and not args.service:
-        parser.error(
-            "--dedup-index is the service-mode cross-epoch near-dup pass; "
-            "batch runs use the standalone --build/--probe-dedup-index modes"
-        )
-    if args.dedup_substrings_index and not args.service:
-        parser.error(
-            "--dedup-substrings-index is the service-mode cross-epoch "
-            "substring pass; batch corpora use the standalone "
-            "--dedup-substrings mode"
-        )
-    if args.raw and args.service:
-        parser.error(
-            "--raw is batch-only (no binaryFile streaming source); "
-            "service mode consumes parquet document drops"
-        )
+    for ok, msg in mode.checks:
+        if not ok(args):
+            parser.error(msg)
+    args.mode, args.target_list, args.monitor_list = mode, [], []
+    # --compact-lineage alone (no --batch/--service) is the standalone
+    # compaction of a STOPPED stream's lineage, not the batch knob
+    args.compact_only = args.compact_lineage and not (args.batch or args.service)
+    if mode.prepare:
+        mode.prepare(parser, args)
+    return args
+
+
+def main(argv: list[str] | None = None) -> None:
+    args = parse_args(argv)
+    mode = args.mode
+    spark = table = None
+    if mode.session:
+        from .session import get_spark
+
+        spark = get_spark(app="pmocr_spark_job", master=args.master)
+    if mode.reads:
+        path = getattr(args, mode.reads)
+        table = spark.read.parquet(path)
+        want = [args.text_col if c == TEXT else c for c in mode.cols]
+        if any(c not in table.columns for c in want):
+            hint = "; --text-col overrides" if TEXT in mode.cols else ""
+            raise SystemExit(
+                f"pmocr-spark: {mode.flag}: {path} needs ({', '.join(want)}) "
+                f"columns (columns: {table.columns}{hint})"
+            )
+    res = mode.run(spark, args, table)
+    if isinstance(res, tuple):
+        out, summary = res
+        out.write.mode("overwrite").parquet(args.output)
+        res = summary(spark.read.parquet(args.output))
+    if res:
+        print(f"pmocr-spark: {res}")
+
+
+# ---------------------------------------------------------------- --batch / --service
+
+
+def _check_pipeline(parser: argparse.ArgumentParser, args: argparse.Namespace) -> None:
+    """--batch/--service: input source, required paths, target lists."""
     if args.raw and (args.input or args.blobs):
         parser.error("--raw replaces --input/--blobs; give one or the other")
     # per-dir monitors carry their own input dirs; --raw carries its own
     # input tree and derives blobs from it
     if args.monitor or args.raw:
         required = ("blobs", "output", "lineage") if args.monitor else ("output", "lineage")
-    elif getattr(args, "input_format", "parquet") == "warc":
+    elif args.input_format == "warc":
         # warc shards carry documents AND media payloads in one stream
         required = ("input", "output", "lineage")
     else:
@@ -1745,7 +1210,6 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
         return targets
 
     args.target_list = validate_targets(args.targets)
-    args.monitor_list = []
     if args.monitor:
         import os
 
@@ -1764,7 +1228,21 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
                 i += 1
             names.append(name)
             args.monitor_list.append((name, d, validate_targets(tgts)))
-    return args
+
+
+def _pipeline_basics(args):
+    """(ocr_udf, job_ts, suffix) of a --batch/--service run. The engine
+    resolves before any Spark job: a missing tesseract install (or an
+    unknown name) fails fast at the CLI, not deep in an executor task.
+    'codec' resolves to None = the env-driven default UDF instance
+    (identical behavior/plan to pre---engine builds)."""
+    ocr_udf = None
+    if args.engine != "codec":
+        from . import engines
+
+        ocr_udf = engines.ocr_udf_for(args.engine)
+    job_ts = args.job_ts.replace("T", " ").replace("Z", "")
+    return ocr_udf, job_ts, "" if args.no_suffix else args.suffix
 
 
 def launch_monitors(spark, args, blobs, job_ts: str, suffix: str, trigger: dict, ocr_udf=None):
@@ -1780,11 +1258,7 @@ def launch_monitors(spark, args, blobs, job_ts: str, suffix: str, trigger: dict,
     dirs directly (unchanged layout)."""
     from . import streaming
 
-    specs = (
-        [(name, d, tgts) for name, d, tgts in args.monitor_list]
-        if getattr(args, "monitor_list", None)
-        else [(None, args.input, args.target_list)]
-    )
+    specs = args.monitor_list or [(None, args.input, args.target_list)]
     ckpt_base = args.stream_checkpoint or args.lineage + "_offsets"
     queries = []
     for name, input_dir, tgts in specs:
@@ -1807,7 +1281,7 @@ def launch_monitors(spark, args, blobs, job_ts: str, suffix: str, trigger: dict,
             broadcast_spans=(args.span_join != "shuffle"),
             num_partitions=args.num_partitions,
             ocr_udf=ocr_udf,
-            input_format=getattr(args, "input_format", "parquet"),
+            input_format=args.input_format,
             dedup_index_dir=sub(args.dedup_index) if args.dedup_index else None,
             substr_index_dir=(
                 sub(args.dedup_substrings_index)
@@ -1819,38 +1293,220 @@ def launch_monitors(spark, args, blobs, job_ts: str, suffix: str, trigger: dict,
     return queries
 
 
-def _run_dedup_index_op(spark, args) -> None:
-    """Dedup-index lifecycle maintenance (round-3 verdict item #4): the
-    persisted-index recipe from operators/dedup_index's module docstring
-    as CLI modes. build writes index+sidecar; probe/merge band the new
-    batch with the SIDECAR's params (never the defaults — a mismatched
-    banding silently finds nothing, which probe_index now rejects);
-    merge is append-cheap (apply_cap=False); compact runs the periodic
-    hot-bucket cap. merge/compact rewrite the index dir via
-    checkpoint.replace_dir (write-aside + rename; atomic on
-    rename-atomic filesystems) and restore the params sidecar the swap
-    discarded.
+def _run_service(spark, args, _) -> None:
+    ocr_udf, job_ts, suffix = _pipeline_basics(args)
+    if args.input_format == "warc":
+        # the streaming file source has no whole-file binary format;
+        # crawl shards are a bounded-batch input by nature (a crawl
+        # is finished before it ships) — loud error over silent
+        # misread, the engines.py missing-dependency discipline
+        raise SystemExit(
+            "pmocr-spark: --input-format warc is batch-only; "
+            "run batch mode over the shard directory"
+        )
+    if args.input_format == "jsonl":
+        from .sources.jsonl import read_blobs_jsonl
 
-    Cap discipline: the hot-bucket cap is a POLICY (recorded in the
-    sidecar), never applied to rows the index STORES — build and merge
-    write uncapped band rows, compact enforces the cap, and probe caps
-    its view of the index transiently. Capping stored rows per batch
-    drops them irreversibly, so a later compaction would disagree with
-    a one-shot build over the union of all batches (the parity
-    tests/test_dedup_index.py and test_cli.py pin)."""
+        blobs = read_blobs_jsonl(spark, args.blobs)
+    else:  # parquet / orc
+        blobs = spark.read.format(args.input_format).load(args.blobs)
+    # default: poller interval parity (INOTIFY_POLLER_INTERVAL,
+    # default.conf:33); --once: W4 reconciliation pass that drains
+    # the landing dir(s) and terminates
+    trigger = {"availableNow": True} if args.once else {"processingTime": "30 seconds"}
+    queries = launch_monitors(
+        spark, args, blobs, job_ts, suffix, trigger=trigger, ocr_udf=ocr_udf
+    )
+    # all queries run concurrently; blocking on each in turn = block
+    # until every monitor stops (pmOCR parks in its sleep loop while
+    # the per-dir OCR_service subshells run, pmocr.sh:2540-2544)
+    for _name, q in queries:
+        q.awaitTermination()
+
+
+def _run_batch(spark, args, _) -> None:
+    from datetime import datetime
+
+    from pyspark.sql import functions as F
+
+    from . import checkpoint as ckpt
+    from . import pipeline
+
+    ocr_udf, job_ts, suffix = _pipeline_basics(args)
+    if args.raw:
+        from .sources.binary import lift_to_documents, read_media_dir
+
+        blobs = read_media_dir(spark, args.raw)
+        docs = lift_to_documents(blobs)
+    elif args.input_format == "warc":
+        from .sources.warc import read_warc_records, warc_to_documents
+
+        docs, blobs = warc_to_documents(read_warc_records(spark, args.input))
+    elif args.input_format == "jsonl":
+        from .sources.jsonl import read_blobs_jsonl, read_documents_jsonl
+
+        docs = read_documents_jsonl(spark, args.input)
+        blobs = read_blobs_jsonl(spark, args.blobs)
+    else:  # parquet / orc
+        docs = spark.read.format(args.input_format).load(args.input)
+        blobs = spark.read.format(args.input_format).load(args.blobs)
+    lineage = ckpt.read_checkpoint(spark, args.lineage)
+    if lineage is not None:
+        # one scan for the warning + resume filter + retry-count lookup
+        lineage = lineage.persist()
+        # P2 retry runs on the deterministic job clock: if --job-ts does
+        # not advance past the last run's, failed docs stay postponed
+        # forever and retry-with-postponement silently never fires
+        import sys
+
+        last = lineage.agg(F.max("ts").alias("t")).collect()[0]["t"]
+        try:
+            job_dt = datetime.fromisoformat(job_ts)
+        except ValueError:
+            job_dt = None  # odd-but-castable format: skip the advisory
+        if last is not None and job_dt is not None and job_dt <= last:
+            print(
+                f"pmocr-spark: warning: --job-ts {job_ts!r} does not advance "
+                f"past the lineage's last run ({last}); failed docs remain "
+                "postponed — pass a later --job-ts to retry them",
+                file=sys.stderr,
+            )
+    results = pipeline.run_batch(
+        spark,
+        docs,
+        blobs,
+        checkpoint=lineage,
+        num_partitions=args.num_partitions,
+        broadcast_spans=(args.span_join != "shuffle"),
+        job_ts=job_ts,
+        ocr_udf=ocr_udf,
+    )
+    cached = results.persist()
+    # F7 output-name projection + Q1 multi-target fan-out (doc_id is
+    # unique, so F8 collision resolution is a no-op here; q06 exercises
+    # the windowed variant)
+    out = pipeline.project_targets(
+        cached, args.target_list, job_ts, suffix=suffix, addition=args.filename_addition
+    )
+    pcols = []
+    if args.partition_by:
+        pcols = [c.strip() for c in args.partition_by.split(",") if c.strip()]
+        missing = [c for c in pcols if c not in out.columns]
+        if missing:
+            raise SystemExit(
+                f"pmocr-spark: error: --partition-by column(s) {missing} not in "
+                f"the results table; available: {', '.join(out.columns)}"
+            )
+    if args.output_format == "wet":
+        from .sources.warc import write_wet
+
+        if pcols:
+            raise SystemExit(
+                "pmocr-spark: --partition-by does not compose with "
+                "--output-format wet (shard layout is the format)"
+            )
+        if "txt" not in out.columns:
+            raise SystemExit(
+                "pmocr-spark: --output-format wet needs the txt target; "
+                "add txt to --targets"
+            )
+        # WET is the extracted-text artifact: done docs only (failures
+        # and skips live in lineage, exactly like CommonCrawl's WET
+        # files carry successful conversions only)
+        write_wet(out.filter(F.col("status") == "done"), args.output, job_ts=job_ts)
+    elif args.output_format == "jsonl":
+        from .sources.jsonl import write_jsonl
+
+        write_jsonl(out, args.output, partition_by=pcols or None)
+    else:
+        writer = out.write.mode("append")
+        if pcols:
+            writer = writer.partitionBy(*pcols)
+        writer.format(args.output_format).save(args.output)  # parquet / orc
+    rows = ckpt.checkpoint_rows(cached, run_id=args.run_id, job_ts=job_ts, prior=lineage)
+    ckpt.append_checkpoint(rows, args.lineage)
+    cached.unpersist()
+    if lineage is not None:
+        lineage.unpersist()
+    if args.metrics:
+        # re-read AFTER the append so the report covers this run too;
+        # overwrite — the report is a derived view of the lineage table
+        full = ckpt.read_checkpoint(spark, args.lineage)
+        ckpt.partition_metrics(full).write.mode("overwrite").parquet(args.metrics)
+    if args.compact_lineage:
+        # after metrics: the per-run partition report needs the full
+        # history; compaction keeps only each doc's winning row
+        ckpt.compact_checkpoint(spark, args.lineage)
+
+
+# ---------------------------------------------------------------- index lifecycles
+
+
+def _compact_lineage(spark, args, _):
+    from . import checkpoint as ckpt
+
+    n = ckpt.compact_checkpoint(spark, args.lineage)
+    return f"compacted lineage at {args.lineage} to {n} rows"
+
+
+# Dedup-index lifecycle maintenance (round-3 verdict item #4): the
+# persisted-index recipe from operators/dedup_index's module docstring
+# as CLI modes. build writes index+sidecar; probe/merge band the new
+# batch with the SIDECAR's params (never the defaults — a mismatched
+# banding silently finds nothing, which probe_index now rejects); merge
+# is append-cheap (apply_cap=False); compact runs the periodic
+# hot-bucket cap. merge/compact rewrite the index dir via
+# checkpoint.replace_dir (write-aside + rename; atomic on rename-atomic
+# filesystems) and restore the params sidecar the swap discarded.
+#
+# Cap discipline: the hot-bucket cap is a POLICY (recorded in the
+# sidecar), never applied to rows the index STORES — build and merge
+# write uncapped band rows, compact enforces the cap, and probe caps its
+# view of the index transiently. Capping stored rows per batch drops
+# them irreversibly, so a later compaction would disagree with a
+# one-shot build over the union of all batches (the parity
+# tests/test_dedup_index.py and test_cli.py pin).
+
+
+def _build_dedup_index(spark, args, docs):
+    from .operators import dedup_index as di
+
+    # uncapped rows on disk (see cap discipline above); the sidecar
+    # written by write_index records the default cap as the policy
+    di.write_index(di.build_index(docs, max_bucket=None), args.build_dedup_index)
+    return f"built dedup index at {args.build_dedup_index}"
+
+
+def _probe_dedup_index(spark, args, docs):
+    from .operators import dedup_index as di
+
+    index, params = di.read_index(spark, args.probe_dedup_index)
+    # transient capped VIEW of the index: protects the join from hot
+    # buckets even when no compaction has run yet, and makes probe hits
+    # identical to probing a freshly compacted index. The PROBE side
+    # bands stay uncapped (max_bucket=None): capping them would silently
+    # skip checking a flood batch's docs against the index — the
+    # service-mode hook's exact semantics.
+    hits = di.probe_index(
+        docs,
+        di.cap_index(index, params["max_bucket"]),
+        broadcast_probe=(args.probe_broadcast == "force") or None,
+        index_params=params,
+        max_bucket=None,
+        n_hashes=params["n_hashes"],
+        band_size=params["band_size"],
+    )
+    return hits, lambda _: f"probe hits written to {args.output}"
+
+
+def _rewrite_dedup_index(spark, idx_dir: str, op: str, rewrite) -> str:
+    """merge/compact: rewrite(index, params) -> the new index rows, which
+    replace the dir; the params sidecar is restored after the swap."""
     from . import checkpoint as ckpt
     from .operators import dedup_index as di
 
-    op, idx_dir = args.dedup_index_op
-    if op == "build":
-        docs = spark.read.parquet(args.input)
-        # uncapped rows on disk (see cap discipline above); the sidecar
-        # written by write_index records the default cap as the policy
-        di.write_index(di.build_index(docs, max_bucket=None), idx_dir)
-        print(f"pmocr-spark: built dedup index at {idx_dir}")
-        return
     index, params = di.read_index(spark, idx_dir)
-    if op in ("merge", "compact") and params.get("source") == "defaults":
+    if params.get("source") == "defaults":
         # refuse to LAUNDER guessed params into an authoritative sidecar:
         # write_meta below strips the 'source' marker, so a merge/compact
         # over a sidecar-less index would record the defaults as the
@@ -1865,45 +1521,34 @@ def _run_dedup_index_op(spark, args) -> None:
             "with the build's n_hashes/band_size/max_bucket) or rebuild "
             "the index."
         )
-    band_kwargs = {
-        "n_hashes": params["n_hashes"],
-        "band_size": params["band_size"],
-    }
-    if op == "probe":
-        docs = spark.read.parquet(args.input)
-        # transient capped VIEW of the index: protects the join from
-        # hot buckets even when no compaction has run yet, and makes
-        # probe hits identical to probing a freshly compacted index.
-        # The PROBE side bands stay uncapped (max_bucket=None): capping
-        # them would silently skip checking a flood batch's docs against
-        # the index — the service-mode hook's exact semantics.
-        hits = di.probe_index(
-            docs,
-            di.cap_index(index, params["max_bucket"]),
-            broadcast_probe=(args.probe_broadcast == "force") or None,
-            index_params=params,
-            max_bucket=None,
-            **band_kwargs,
-        )
-        hits.write.mode("overwrite").parquet(args.output)
-        print(f"pmocr-spark: probe hits written to {args.output}")
-        return
-    if op == "merge":
-        docs = spark.read.parquet(args.input)
-        # no per-batch cap (max_bucket=None): capping a single batch at
-        # merge time drops rows IRREVERSIBLY, so a later compaction sees
-        # a smaller bucket than a one-shot build over the union would —
-        # the deferred-cap design puts the cap ONLY in the compaction
-        # pass (tests/test_dedup_index.py pins maintained == one-shot)
-        new_bands = di.build_index(
-            docs,
-            n_hashes=params["n_hashes"],
-            band_size=params["band_size"],
-            max_bucket=None,
-        )
-        merged = di.merge_index(index, new_bands, apply_cap=False).persist()
-        n = merged.count()  # materialize before replacing the dir it reads
-    else:  # compact
+    merged = rewrite(index, params).persist()
+    n = merged.count()  # materialize before replacing the dir it reads
+    ckpt.replace_dir(spark, merged, idx_dir, tag=".dedup")
+    merged.unpersist()
+    di.write_meta(spark, idx_dir, params)
+    return f"{op} rewrote dedup index at {idx_dir} ({n} rows)"
+
+
+def _merge_dedup_index(spark, args, docs):
+    from .operators import dedup_index as di
+
+    # no per-batch cap (max_bucket=None): capping a single batch at merge
+    # time drops rows IRREVERSIBLY, so a later compaction sees a smaller
+    # bucket than a one-shot build over the union would — the
+    # deferred-cap design puts the cap ONLY in the compaction pass
+    # (tests/test_dedup_index.py pins maintained == one-shot)
+    def merge(index, params):
+        geometry = {k: params[k] for k in ("n_hashes", "band_size")}
+        new_bands = di.build_index(docs, max_bucket=None, **geometry)
+        return di.merge_index(index, new_bands, apply_cap=False)
+
+    return _rewrite_dedup_index(spark, args.merge_dedup_index, "merge", merge)
+
+
+def _compact_dedup_index(spark, args, _):
+    from .operators import dedup_index as di
+
+    def compact(index, params):
         merged = di.cap_index(index, params["max_bucket"])
         if "epoch" in merged.columns:
             # flatten stream-accumulated history to epoch-less SEED rows
@@ -1914,67 +1559,67 @@ def _run_dedup_index_op(spark, args) -> None:
             # epoch-0 write would collide with the old subdir). Run this
             # only with the stream STOPPED — same rule as the substr twin.
             merged = merged.drop("epoch").distinct()
-        merged = merged.persist()
-        n = merged.count()
-    ckpt.replace_dir(spark, merged, idx_dir, tag=".dedup")
-    merged.unpersist()
-    di.write_meta(spark, idx_dir, params)
-    print(f"pmocr-spark: {op} rewrote dedup index at {idx_dir} ({n} rows)")
+        return merged
+
+    return _rewrite_dedup_index(spark, args.compact_dedup_index, "compact", compact)
 
 
-def _run_pq_index_op(spark, args) -> None:
-    """PQ-index lifecycle maintenance, the ANN twin of
-    _run_dedup_index_op. build encodes the --input embeddings and
-    persists codes + codebook sidecar; append encodes a new batch
-    against the SIDECAR's codebook (never a fresh one — codes from two
-    codebooks are incomparable, which read_pq_index's guards enforce)
-    and appends, no compaction needed (per-vector codes are
-    independent); probe runs the ADC top-k scan, optionally reranked by
-    exact cosine over --rerank-vectors (the scan→shortlist→rerank shape
-    of q21 part='pq' — compressed distance finds the neighborhood,
-    exact distance orders it)."""
+# PQ-index lifecycle, the ANN twin of the dedup index. build encodes the
+# --input embeddings and persists codes + codebook sidecar; append
+# encodes a new batch against the SIDECAR's codebook (never a fresh one
+# — codes from two codebooks are incomparable, which read_pq_index's
+# guards enforce) and appends, no compaction needed (per-vector codes are
+# independent); probe runs the ADC top-k scan, optionally reranked by
+# exact cosine over --rerank-vectors (the scan→shortlist→rerank shape of
+# q21 part='pq' — compressed distance finds the neighborhood, exact
+# distance orders it).
+
+
+def _build_pq_index(spark, args, emb):
+    from .operators import pq
+
+    batch = pq.normalize_embeddings(emb)
+    iters = args.train_codebook
+    book = pq.train_codebook(batch, iters=iters) if iters is not None else pq.pq_codebook(batch)
+    # routing state (per-code IVF cluster id) is persisted
+    # unconditionally: one int per code, computed in the same broadcast
+    # encode pass, and it is what makes --ivf-nprobe probes possible
+    # later — at 10^12 codes the routed probe is the only probe that
+    # matters
+    pq.write_pq_index(
+        pq.pq_encode(batch, book, ivf_n_cent=pq.N_IVF),
+        book,
+        args.build_pq_index,
+        ivf_n_cent=pq.N_IVF,
+    )
+    trained = f" (codebook Lloyd-trained, {iters} iters)" if iters is not None else ""
+    return f"built pq index at {args.build_pq_index}{trained}"
+
+
+def _append_pq_index(spark, args, emb):
+    from .operators import pq
+
+    idx_dir = args.append_pq_index
+    batch = pq.normalize_embeddings(emb)
+    _codes, book, meta = pq.read_pq_index(spark, idx_dir)
+    # encode with the INDEX's routing config (None for a pre-routing
+    # index) — write_pq_index rejects a mismatch
+    nc = meta.get("ivf_n_cent")
+    pq.write_pq_index(
+        pq.pq_encode(batch, book, ivf_n_cent=nc), book, idx_dir, mode="append", ivf_n_cent=nc
+    )
+    return f"appended batch codes to pq index at {idx_dir}"
+
+
+def _probe_pq_index(spark, args, emb):
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
     from .operators import pq
 
-    op, idx_dir = args.pq_index_op
-    batch = pq.normalize_embeddings(spark.read.parquet(args.input))
-    if op == "build":
-        book = (
-            pq.train_codebook(batch, iters=args.train_codebook)
-            if args.train_codebook is not None
-            else pq.pq_codebook(batch)
-        )
-        # routing state (per-code IVF cluster id) is persisted
-        # unconditionally: one int per code, computed in the same
-        # broadcast encode pass, and it is what makes --ivf-nprobe
-        # probes possible later — at 10^12 codes the routed probe is
-        # the only probe that matters
-        pq.write_pq_index(
-            pq.pq_encode(batch, book, ivf_n_cent=pq.N_IVF),
-            book,
-            idx_dir,
-            ivf_n_cent=pq.N_IVF,
-        )
-        trained = (
-            f" (codebook Lloyd-trained, {args.train_codebook} iters)"
-            if args.train_codebook is not None
-            else ""
-        )
-        print(f"pmocr-spark: built pq index at {idx_dir}{trained}")
-        return
+    idx_dir = args.probe_pq_index
+    batch = pq.normalize_embeddings(emb)
     codes, book, meta = pq.read_pq_index(spark, idx_dir)
-    if op == "append":
-        # encode with the INDEX's routing config (None for a pre-routing
-        # index) — write_pq_index rejects a mismatch
-        nc = meta.get("ivf_n_cent")
-        pq.write_pq_index(
-            pq.pq_encode(batch, book, ivf_n_cent=nc), book, idx_dir, mode="append", ivf_n_cent=nc
-        )
-        print(f"pmocr-spark: appended batch codes to pq index at {idx_dir}")
-        return
-    # probe
     q = batch.select(F.col("vec_id").alias("query_id"), "en")
     tables = pq.pq_query_tables(q, book)
     by = None
@@ -2014,291 +1659,218 @@ def _run_pq_index_op(spark, args) -> None:
             )
             .filter(F.col("rk") <= topk)
         )
-    hits.write.mode("overwrite").parquet(args.output)
-    print(f"pmocr-spark: pq probe hits written to {args.output}")
+    return hits, lambda _: f"pq probe hits written to {args.output}"
 
 
-def _run_text_index_op(spark, args) -> None:
-    """BM25 text-index lifecycle, the sparse-retrieval twin of
-    _run_pq_index_op. build persists the inverted index (postings/dl/df
-    + stats sidecar) over the --input documents table; append tokenizes
-    a new (doc_id-disjoint) batch and appends — every component is
-    additive, so there is no merge pass; search scores --query against
-    the persisted index with the exact same _score_topk path the q21
-    gate arm uses."""
-    from .operators import bm25
+def _text_index(op: str):
+    """BM25 text-index build/append: the inverted index (postings/dl/df
+    + stats sidecar) over the --input documents table; every component
+    is additive over doc_id-disjoint batches, so append needs no merge
+    pass."""
 
-    op, idx_dir = args.text_index_op
-    if op in ("build", "append"):
-        docs = spark.read.parquet(args.input)
+    def run(spark, args, docs):
+        from .operators import bm25
+
+        idx_dir = getattr(args, f"{op}_text_index")
         mode = "append" if op == "append" else "overwrite"
         meta = bm25.write_text_index(docs, idx_dir, mode=mode)
-        print(
-            f"pmocr-spark: {op} text index at {idx_dir} "
-            f"({meta['n_docs']} docs, {meta['sum_dl']} tokens)"
-        )
-        return
+        return f"{op} text index at {idx_dir} ({meta['n_docs']} docs, {meta['sum_dl']} tokens)"
+
+    return run
+
+
+def _search_text(spark, args, _):
+    """Scores --query against the persisted index with the exact same
+    _score_topk path the q21 gate arm uses."""
+    from .operators import bm25
+
     queries = bm25.parse_query_terms(spark, args.query)
     hits = bm25.search_text_index(
-        spark,
-        idx_dir,
-        queries,
-        topk=args.search_topk or 5,
-        max_df_frac=args.max_df,
+        spark, args.search_text, queries, topk=args.search_topk or 5, max_df_frac=args.max_df
     )
-    hits.write.mode("overwrite").parquet(args.output)
-    n = spark.read.parquet(args.output).count()
-    print(f"pmocr-spark: text search wrote {n} hits to {args.output}")
+    return hits, lambda got: f"text search wrote {got.count()} hits to {args.output}"
 
 
-def _run_bloom_index_op(spark, args) -> None:
-    """Bloom membership pre-filter lifecycle, the cheap first tier in
-    front of _run_dedup_index_op. build hashes the --input table's
-    --bloom-key-col into k set-bit positions and persists them with the
-    (m, k) geometry sidecar; append is the Bloom OR (pure position
-    append, geometry enforced); probe answers definitely-new /
-    maybe-member per input row with zero probe-side shuffle (the
-    broadcast path) — route only the maybe rows to the exact index;
-    compact rewrites the positions distinct."""
+def _search_phrase(spark, args, docs):
+    from .operators import bm25
+
+    phrases = spark.createDataFrame(
+        [(i, p.strip()) for i, p in enumerate(args.search_phrase.split(",")) if p.strip()],
+        "query_id long, phrase string",
+    )
+    hits = bm25.phrase_search(docs, phrases, topk=args.search_topk or 5, text_col=args.text_col)
+    return hits, lambda got: f"phrase search wrote {got.count()} hits to {args.output}"
+
+
+# Bloom membership pre-filter lifecycle, the cheap first tier in front of
+# the dedup index. build hashes the --input table's --bloom-key-col into
+# k set-bit positions and persists them with the (m, k) geometry sidecar;
+# append is the Bloom OR (pure position append, geometry enforced); probe
+# answers definitely-new / maybe-member per input row with zero
+# probe-side shuffle (the broadcast path) — route only the maybe rows to
+# the exact index; compact rewrites the positions distinct.
+
+
+def _bloom_keyed(args, batch):
     from pyspark.sql import functions as F
 
-    from .operators import bloom
-
-    op, idx_dir = args.bloom_index_op
-    if op == "compact":
-        n = bloom.compact_bloom_index(spark, idx_dir)
-        print(f"pmocr-spark: compacted bloom index at {idx_dir} to {n} positions")
-        return
     key_col = args.bloom_key_col or "text"
-    batch = spark.read.parquet(args.input)
     if key_col not in batch.columns:
         raise SystemExit(
             f"pmocr-spark: error: --input has no column {key_col!r} "
             f"(columns: {', '.join(batch.columns)}); set --bloom-key-col"
         )
-    keyed = batch.withColumn("_bkey", F.md5(F.col(key_col).cast("binary")))
-    if op == "build":
-        m = args.bloom_m if args.bloom_m is not None else bloom.BLOOM_M
-        k = args.bloom_k if args.bloom_k is not None else bloom.BLOOM_K
-        bits = bloom.bloom_build(keyed, key_col="_bkey", m=m, k=k)
-        bloom.write_bloom_index(bits, idx_dir, m=m, k=k)
-        print(f"pmocr-spark: built bloom index at {idx_dir} (m={m}, k={k})")
-        return
-    bits, meta = bloom.read_bloom_index(spark, idx_dir)
-    if op == "append":
-        add = bloom.bloom_build(keyed, key_col="_bkey", m=meta["m"], k=meta["k"])
-        bloom.write_bloom_index(
-            add, idx_dir, m=meta["m"], k=meta["k"], mode="append"
-        )
-        print(f"pmocr-spark: appended batch positions to bloom index at {idx_dir}")
-        return
-    # probe
-    out = bloom.bloom_probe(
-        keyed, bits, key_col="_bkey", m=meta["m"], k=meta["k"]
-    ).drop("_bkey")
-    out.write.mode("overwrite").parquet(args.output)
-    counts = (
-        spark.read.parquet(args.output)
-        .agg(
-            F.count("*").alias("n"),
-            F.coalesce(F.sum("maybe_member"), F.lit(0)).alias("maybe"),
-        )
-        .collect()[0]
-    )
-    print(
-        f"pmocr-spark: probed {counts['n']} rows against {idx_dir}: "
-        f"{counts['maybe']} maybe-member (exact-check these), "
-        f"{counts['n'] - counts['maybe']} definitely new"
-    )
+    return batch.withColumn("_bkey", F.md5(F.col(key_col).cast("binary")))
 
 
-def main(argv: list[str] | None = None) -> None:
-    from datetime import datetime
+def _build_bloom_index(spark, args, batch):
+    from .operators import bloom
 
+    m = args.bloom_m if args.bloom_m is not None else bloom.BLOOM_M
+    k = args.bloom_k if args.bloom_k is not None else bloom.BLOOM_K
+    bits = bloom.bloom_build(_bloom_keyed(args, batch), key_col="_bkey", m=m, k=k)
+    bloom.write_bloom_index(bits, args.build_bloom_index, m=m, k=k)
+    return f"built bloom index at {args.build_bloom_index} (m={m}, k={k})"
+
+
+def _append_bloom_index(spark, args, batch):
+    from .operators import bloom
+
+    idx_dir = args.append_bloom_index
+    keyed = _bloom_keyed(args, batch)
+    _bits, meta = bloom.read_bloom_index(spark, idx_dir)
+    add = bloom.bloom_build(keyed, key_col="_bkey", m=meta["m"], k=meta["k"])
+    bloom.write_bloom_index(add, idx_dir, m=meta["m"], k=meta["k"], mode="append")
+    return f"appended batch positions to bloom index at {idx_dir}"
+
+
+def _probe_bloom_index(spark, args, batch):
     from pyspark.sql import functions as F
 
+    from .operators import bloom
+
+    idx_dir = args.probe_bloom_index
+    keyed = _bloom_keyed(args, batch)
+    bits, meta = bloom.read_bloom_index(spark, idx_dir)
+    out = bloom.bloom_probe(keyed, bits, key_col="_bkey", m=meta["m"], k=meta["k"]).drop("_bkey")
+
+    def summary(got):
+        c = got.agg(
+            F.count("*").alias("n"),
+            F.coalesce(F.sum("maybe_member"), F.lit(0)).alias("maybe"),
+        ).collect()[0]
+        return (
+            f"probed {c['n']} rows against {idx_dir}: "
+            f"{c['maybe']} maybe-member (exact-check these), "
+            f"{c['n'] - c['maybe']} definitely new"
+        )
+
+    return out, summary
+
+
+def _compact_bloom_index(spark, args, _):
+    from .operators import bloom
+
+    n = bloom.compact_bloom_index(spark, args.compact_bloom_index)
+    return f"compacted bloom index at {args.compact_bloom_index} to {n} positions"
+
+
+def _compact_substr_index(spark, args, _):
     from . import checkpoint as ckpt
-    from . import pipeline, streaming
-    from .session import get_spark
+    from .operators.substring_dedup import GRAM_META, read_gram_index
 
-    args = parse_args(argv)
-    if getattr(args, "lsh_plan", None):
-        # pure driver-side arithmetic: no Spark session, instant
-        import json as _json
+    idx_dir = args.compact_substr_index
+    meta = ckpt.read_sidecar(spark, idx_dir, GRAM_META)
+    flat = read_gram_index(spark, idx_dir).select("gh").distinct().persist()
+    n = flat.count()  # materialize before replacing the dir it reads
+    ckpt.replace_dir(spark, flat, idx_dir, tag=".substr")
+    flat.unpersist()
+    if meta is not None:  # restore the sidecar the swap discarded
+        ckpt.write_sidecar(spark, idx_dir, GRAM_META, meta)
+    return f"compacted gram index at {idx_dir} to {n} rows"
 
-        from .operators.lsh_plan import plan_bands
 
-        parts = [x.strip() for x in args.lsh_plan.split(",")]
-        if len(parts) < 2 or len(parts) > 4:
-            raise SystemExit(
-                "pmocr-spark: --lsh-plan wants N_HASHES,THRESHOLD[,FP_W[,FN_W]]"
+# ---------------------------------------------------------------- media modes
+
+
+def _ok_err(got) -> tuple[int, int]:
+    """(rows without, rows with) an error, the error-as-data split."""
+    from pyspark.sql import functions as F
+
+    return (
+        got.filter(F.col("error").isNull()).count(),
+        got.filter(F.col("error").isNotNull()).count(),
+    )
+
+
+def _transcribe(kind: str):
+    def run(spark, args, blobs):
+        from pyspark.sql import functions as F
+
+        from .operators import multimodal
+
+        op = getattr(multimodal, f"{kind}_transcribe")
+        out = blobs.select("media_ref", op(F.col("content")).alias("t")).select("media_ref", "t.*")
+
+        def summary(got):
+            n_ok, n_err = _ok_err(got)
+            return (
+                f"transcribed {n_ok} {kind} blobs "
+                f"({n_err} failed as error rows) to {args.output}"
             )
-        try:
-            plan = plan_bands(
-                int(parts[0]),
-                float(parts[1]),
-                fp_weight=float(parts[2]) if len(parts) > 2 else 1.0,
-                fn_weight=float(parts[3]) if len(parts) > 3 else 1.0,
-            )
-        except ValueError as e:
-            raise SystemExit(f"pmocr-spark: --lsh-plan: {e}")
-        print(_json.dumps(plan))
-        return
-    targets = args.target_list
-    # resolve the engine BEFORE any Spark work: a missing tesseract
-    # install (or an unknown name) fails fast at the CLI, not deep in an
-    # executor task. 'codec' resolves to None = the env-driven default
-    # UDF instance (identical behavior/plan to pre---engine builds).
-    ocr_udf = None
-    if getattr(args, "engine", "codec") != "codec":
-        from . import engines
 
-        ocr_udf = engines.ocr_udf_for(args.engine)
-    spark = get_spark(app="pmocr_spark_job", master=args.master)
-    if getattr(args, "compact_only", False):
-        n = ckpt.compact_checkpoint(spark, args.lineage)
-        print(f"pmocr-spark: compacted lineage at {args.lineage} to {n} rows")
-        return
-    if getattr(args, "dedup_index_op", None):
-        _run_dedup_index_op(spark, args)
-        return
-    if getattr(args, "pq_index_op", None):
-        _run_pq_index_op(spark, args)
-        return
-    if getattr(args, "text_index_op", None):
-        _run_text_index_op(spark, args)
-        return
-    if getattr(args, "search_phrase", None):
-        from .operators import bm25
+        return out, summary
 
-        docs = spark.read.parquet(args.input)
-        tc = args.text_col
-        if "doc_id" not in docs.columns or tc not in docs.columns:
-            raise SystemExit(
-                f"pmocr-spark: --search-phrase: {args.input} needs "
-                f"(doc_id, {tc}) columns (columns: {docs.columns}; "
-                "--text-col overrides)"
-            )
-        phrases = spark.createDataFrame(
-            [(i, p.strip()) for i, p in enumerate(args.search_phrase.split(","))
-             if p.strip()],
-            "query_id long, phrase string",
-        )
-        hits = bm25.phrase_search(
-            docs, phrases, topk=args.search_topk or 5, text_col=tc
-        )
-        hits.write.mode("overwrite").parquet(args.output)
-        n = spark.read.parquet(args.output).count()
-        print(f"pmocr-spark: phrase search wrote {n} hits to {args.output}")
-        return
-    if getattr(args, "bloom_index_op", None):
-        _run_bloom_index_op(spark, args)
-        return
-    if getattr(args, "compact_substr_index", None):
-        from .operators.substring_dedup import GRAM_META, read_gram_index
+    return run
 
-        idx_dir = args.compact_substr_index
-        meta = ckpt.read_sidecar(spark, idx_dir, GRAM_META)
-        gidx = read_gram_index(spark, idx_dir)
-        flat = gidx.select("gh").distinct().persist()
-        n = flat.count()  # materialize before replacing the dir it reads
-        ckpt.replace_dir(spark, flat, idx_dir, tag=".substr")
-        flat.unpersist()
-        if meta is not None:  # restore the sidecar the swap discarded
-            ckpt.write_sidecar(spark, idx_dir, GRAM_META, meta)
-        print(f"pmocr-spark: compacted gram index at {idx_dir} to {n} rows")
-        return
-    if getattr(args, "transcribe_audio", False):
-        from .operators.multimodal import audio_transcribe
 
-        blobs = spark.read.parquet(args.blobs)
-        out = blobs.select(
-            "media_ref", audio_transcribe(F.col("content")).alias("t")
-        ).select("media_ref", "t.*")
-        out.write.mode("overwrite").parquet(args.output)
-        got = spark.read.parquet(args.output)
-        n_ok = got.filter(F.col("error").isNull()).count()
-        n_err = got.filter(F.col("error").isNotNull()).count()
-        print(
-            f"pmocr-spark: transcribed {n_ok} audio blobs "
-            f"({n_err} failed as error rows) to {args.output}"
-        )
-        return
-    if getattr(args, "transcribe_video", False):
-        from .operators.multimodal import video_transcribe
+def _near_dup(what: str, op_name: str):
+    def run(spark, args, blobs):
+        from .operators import multimodal
 
-        blobs = spark.read.parquet(args.blobs)
-        out = blobs.select(
-            "media_ref", video_transcribe(F.col("content")).alias("t")
-        ).select("media_ref", "t.*")
-        out.write.mode("overwrite").parquet(args.output)
-        got = spark.read.parquet(args.output)
-        n_ok = got.filter(F.col("error").isNull()).count()
-        n_err = got.filter(F.col("error").isNotNull()).count()
-        print(
-            f"pmocr-spark: transcribed {n_ok} video blobs "
-            f"({n_err} failed as error rows) to {args.output}"
-        )
-        return
-    if getattr(args, "corpus_stats", False):
-        import json
+        h = args.phash_max_hamming
+        pairs = getattr(multimodal, op_name)(blobs, **({} if h is None else {"max_hamming": h}))
+        return pairs, lambda got: f"{got.count()} {what} near-dup pairs written to {args.output}"
 
-        from .operators.corpus_stats import corpus_datasheet
+    return run
 
-        docs = spark.read.parquet(args.input)
-        if "text" not in docs.columns:
-            raise SystemExit(
-                f"pmocr-spark: --corpus-stats: {args.input} has no 'text' column"
-            )
-        sheet = corpus_datasheet(docs)
-        with open(args.output, "w") as fh:
-            json.dump(sheet, fh, indent=1)
-        print(
-            f"pmocr-spark: datasheet for {sheet['n_docs']} docs "
-            f"({sheet['total_tokens']} tokens, dup rate "
-            f"{sheet['approx_exact_dup_rate']}) written to {args.output}"
-        )
-        return
-    if getattr(args, "audit_blobs", False):
-        from . import codecs
-        from .operators.html_extract import HTML_KINDS
 
-        blobs = spark.read.parquet(args.blobs)
-        head6 = F.expr("substring(content, 1, 6)")
-        head4 = F.expr("substring(content, 1, 4)")
-        sniff = F.lower(F.expr("cast(substring(content, 1, 256) AS string)"))
-        detected = (
-            F.when(F.col("content").isNull(), "missing")
-            .when(head6 == F.lit(codecs.IMG_MAGIC), "img")
-            .when(head6 == F.lit(codecs.PDF_MAGIC), "pdf")
-            .when(head4 == F.lit(codecs.AUDIO_MAGIC), "audio")
-            .when(head4 == F.lit(codecs.VIDEO_MAGIC), "video")
-            .when(
-                sniff.contains("<html") | sniff.contains("<!doctype html"), "html"
-            )
-            .otherwise("unknown")
-        )
-        kind_lc = F.lower(F.coalesce(F.col("kind"), F.lit("")))
-        expected = (
-            F.when(kind_lc == "pdf", "pdf")
-            .when(kind_lc.isin(*codecs.IMAGE_KINDS), "img")
-            .when(kind_lc.isin(*codecs.AUDIO_KINDS), "audio")
-            .when(kind_lc.isin(*codecs.VIDEO_KINDS), "video")
-            .when(kind_lc.isin(*HTML_KINDS), "html")
-            .otherwise("unknown")
-        )
-        audited = blobs.select(
-            "media_ref",
-            "kind",
-            detected.alias("detected"),
-            (detected == expected).alias("ok"),
-        )
-        audited.filter(~F.col("ok")).select("media_ref", "kind", "detected").write.mode(
-            "overwrite"
-        ).parquet(args.output)
-        counts = (
-            audited.groupBy("kind", "detected", "ok").count().orderBy("kind", "detected")
-        )
+def _audit_blobs(spark, args, blobs):
+    from pyspark.sql import functions as F
+
+    from . import codecs
+    from .operators.html_extract import HTML_KINDS
+
+    head6 = F.expr("substring(content, 1, 6)")
+    head4 = F.expr("substring(content, 1, 4)")
+    sniff = F.lower(F.expr("cast(substring(content, 1, 256) AS string)"))
+    detected = (
+        F.when(F.col("content").isNull(), "missing")
+        .when(head6 == F.lit(codecs.IMG_MAGIC), "img")
+        .when(head6 == F.lit(codecs.PDF_MAGIC), "pdf")
+        .when(head4 == F.lit(codecs.AUDIO_MAGIC), "audio")
+        .when(head4 == F.lit(codecs.VIDEO_MAGIC), "video")
+        .when(sniff.contains("<html") | sniff.contains("<!doctype html"), "html")
+        .otherwise("unknown")
+    )
+    kind_lc = F.lower(F.coalesce(F.col("kind"), F.lit("")))
+    expected = (
+        F.when(kind_lc == "pdf", "pdf")
+        .when(kind_lc.isin(*codecs.IMAGE_KINDS), "img")
+        .when(kind_lc.isin(*codecs.AUDIO_KINDS), "audio")
+        .when(kind_lc.isin(*codecs.VIDEO_KINDS), "video")
+        .when(kind_lc.isin(*HTML_KINDS), "html")
+        .otherwise("unknown")
+    )
+    audited = blobs.select(
+        "media_ref",
+        "kind",
+        detected.alias("detected"),
+        (detected == expected).alias("ok"),
+    )
+
+    def summary(_):
+        counts = audited.groupBy("kind", "detected", "ok").count().orderBy("kind", "detected")
         n_bad = 0
         for r in counts.collect():
             print(
@@ -2307,358 +1879,435 @@ def main(argv: list[str] | None = None) -> None:
             )
             if not r["ok"]:
                 n_bad += r["count"]
-        print(f"pmocr-spark: audit wrote {n_bad} mismatched blobs to {args.output}")
-        return
-    if getattr(args, "fix_text", False):
-        from .functions import dehyphenate, fix_mojibake, is_mojibake, reflow
+        return f"audit wrote {n_bad} mismatched blobs to {args.output}"
 
-        df = spark.read.parquet(args.input)
-        tc = args.text_col
-        if tc not in df.columns:
-            raise SystemExit(f"pmocr-spark: --fix-text: no column {tc!r} in {args.input}")
-        # encoding repair FIRST (mojibake survives reflow but confuses
-        # the hyphen heuristics), then count BEFORE the text repairs so
-        # the counters describe what changed; everything stays inside
-        # one codegen'd map projection
-        c = fix_mojibake(F.col(tc))
-        n_hyp = F.regexp_count(c, F.lit("([A-Za-z0-9])-\n[ \t]*[a-z0-9]"))
-        fixed = reflow(dehyphenate(c))
-        out = (
-            df.withColumn("n_mojibake_repaired", is_mojibake(F.col(tc)))
-            .withColumn("n_hyphens_repaired", n_hyp.cast("long"))
-            .withColumn(
-                "n_breaks_reflowed",
-                (
-                    F.regexp_count(dehyphenate(c), F.lit("\n"))
-                    - F.regexp_count(fixed, F.lit("\n"))
-                ).cast("long"),
+    return audited.filter(~F.col("ok")).select("media_ref", "kind", "detected"), summary
+
+
+def _extract_markdown(spark, args, blobs):
+    import pandas as pd
+
+    from .operators import html_extract as hx
+
+    schema = (
+        "media_ref string, markdown string, tables_json string, "
+        "n_blocks long, n_tables long"
+    )
+
+    def conv(batches):
+        # iterator mapInPandas: constant memory however many blobs;
+        # non-HTML blobs skipped by the same content magic the fused
+        # pipeline UDF dispatches on. Tables ship as JSON (Arrow's
+        # pandas converter rejects triply-nested list columns);
+        # consumers re-structure with from_json('array<array<
+        # array<string>>>').
+        import json
+
+        for pdf in batches:
+            refs, mds, tbls, nb, nt = [], [], [], [], []
+            for ref, blob in zip(pdf["media_ref"], pdf["content"]):
+                if blob is None or not hx.sniff_html(bytes(blob)):
+                    continue
+                try:
+                    doc = bytes(blob).decode("utf-8")
+                except UnicodeDecodeError:
+                    continue
+                md = hx.to_markdown(doc)
+                tables = hx.extract_tables(doc)
+                refs.append(ref)
+                mds.append(md)
+                tbls.append(json.dumps(tables))
+                nb.append(len([b for b in md.split("\n\n") if b]))
+                nt.append(len(tables))
+            yield pd.DataFrame(
+                {
+                    "media_ref": refs,
+                    "markdown": mds,
+                    "tables_json": tbls,
+                    "n_blocks": nb,
+                    "n_tables": nt,
+                }
             )
-            .withColumn(tc, fixed)
+
+    out = blobs.select("media_ref", "content").mapInPandas(conv, schema)
+    return out, lambda got: f"extracted markdown for {got.count()} html blobs to {args.output}"
+
+
+def _word_boxes(spark, args, blobs):
+    import pandas as pd
+
+    from . import codecs
+
+    as_hocr, as_tables, as_layout = args.hocr, args.tables, args.layout
+    what, schema = (
+        ("layout blocks", "block_no long, n_lines long, text string")
+        if as_layout
+        else ("hOCR documents", "hocr string, n_words long")
+        if as_hocr
+        else ("table cells", "block_no long, row_no long, col_no long, cell string, "
+              "x0 long, y0 long, x1 long, y1 long")
+        if as_tables
+        else ("word boxes", "line_no long, word_no long, word string, "
+              "x0 long, y0 long, x1 long, y1 long")
+    )
+    fields = [f.split() for f in schema.split(", ")]
+    cols = ["media_ref", *(name for name, _t in fields), "error"]
+    # an undecodable blob's row: -1 in every long field, null in the rest
+    blank = tuple(-1 if t == "long" else None for _name, t in fields)
+    schema = f"media_ref string, {schema}, error string"
+
+    def boxes(batches):
+        # iterator mapInPandas: constant memory; only image/pdf
+        # containers are OCR-able layout sources (audio/html/video
+        # skipped by the same magic dispatch the fused UDF uses);
+        # undecodable image blobs become one error row each — the
+        # engine's error-as-data discipline, never a lost blob.
+        for pdf in batches:
+            rows = []
+            for ref, blob in zip(pdf["media_ref"], pdf["content"]):
+                if blob is None:
+                    continue
+                b = bytes(blob)
+                if b[:6] not in (codecs.IMG_MAGIC, codecs.PDF_MAGIC):
+                    continue
+                try:
+                    if as_layout:
+                        for bno, btxt in enumerate(codecs.recognize_regions(b)):
+                            rows.append((ref, bno, btxt.count("\n") + 1, btxt, None))
+                    elif as_tables:
+                        # per COLUMN BLOCK: detect_table's whitespace
+                        # channels are only meaningful inside one
+                        # block's coordinate frame — a two-column
+                        # page is two independent tables
+                        for bno, (bws, _n) in enumerate(codecs.recognize_words_blocks(b)):
+                            for rn, cn, cell, x0, x1, y0, y1 in codecs.detect_table(bws):
+                                rows.append((ref, bno, rn, cn, cell, x0, y0, x1, y1, None))
+                    elif as_hocr:
+                        ws = codecs.recognize_words(b)
+                        rows.append((ref, codecs.to_hocr(ws, page_id=ref), len(ws), None))
+                    else:
+                        for ln, wn, w, x0, y0, x1, y1 in codecs.recognize_words(b):
+                            rows.append((ref, ln, wn, w, x0, y0, x1, y1, None))
+                # broad catch, same as the fused UDF (udfs.py): a
+                # magic-valid blob with a torn header raises raw
+                # struct.error from rasterize, and error-as-data
+                # means NO exception may kill the task
+                except Exception as e:  # noqa: BLE001
+                    rows.append((ref, *blank, str(e)))
+            yield pd.DataFrame(rows, columns=cols)
+
+    def summary(got):
+        n_ok, n_err = _ok_err(got)
+        return f"{n_ok} {what} ({n_err} undecodable blobs as error rows) to {args.output}"
+
+    return blobs.select("media_ref", "content").mapInPandas(boxes, schema), summary
+
+
+def _extract_links(spark, args, blobs):
+    from .operators.linkgraph import edges_from_html
+
+    edges = edges_from_html(blobs)
+    return edges, lambda got: f"extracted {got.count()} host-level link edges to {args.output}"
+
+
+# ---------------------------------------------------------------- text modes
+
+
+def _as_text(args, df):
+    """The input with its --text-col column named text."""
+    tc = args.text_col
+    return df.withColumnRenamed(tc, "text") if tc != "text" else df
+
+
+def _corpus_stats(spark, args, docs):
+    from .operators.corpus_stats import corpus_datasheet
+
+    sheet = corpus_datasheet(docs)
+    with open(args.output, "w") as fh:
+        json.dump(sheet, fh, indent=1)
+    return (
+        f"datasheet for {sheet['n_docs']} docs "
+        f"({sheet['total_tokens']} tokens, dup rate "
+        f"{sheet['approx_exact_dup_rate']}) written to {args.output}"
+    )
+
+
+def _fix_text(spark, args, df):
+    from pyspark.sql import functions as F
+
+    from .functions import dehyphenate, fix_mojibake, is_mojibake, reflow
+
+    tc = args.text_col
+    # encoding repair FIRST (mojibake survives reflow but confuses the
+    # hyphen heuristics), then count BEFORE the text repairs so the
+    # counters describe what changed; everything stays inside one
+    # codegen'd map projection
+    c = fix_mojibake(F.col(tc))
+    n_hyp = F.regexp_count(c, F.lit("([A-Za-z0-9])-\n[ \t]*[a-z0-9]"))
+    fixed = reflow(dehyphenate(c))
+    out = (
+        df.withColumn("n_mojibake_repaired", is_mojibake(F.col(tc)))
+        .withColumn("n_hyphens_repaired", n_hyp.cast("long"))
+        .withColumn(
+            "n_breaks_reflowed",
+            (
+                F.regexp_count(dehyphenate(c), F.lit("\n"))
+                - F.regexp_count(fixed, F.lit("\n"))
+            ).cast("long"),
         )
-        out.write.mode("overwrite").parquet(args.output)
-        got = spark.read.parquet(args.output)
+        .withColumn(tc, fixed)
+    )
+
+    def summary(got):
         tot = got.agg(
             F.coalesce(F.sum("n_mojibake_repaired"), F.lit(0)).alias("m"),
             F.coalesce(F.sum("n_hyphens_repaired"), F.lit(0)).alias("h"),
             F.coalesce(F.sum("n_breaks_reflowed"), F.lit(0)).alias("b"),
             F.count("*").alias("n"),
         ).collect()[0]
-        print(
-            f"pmocr-spark: repaired {tot['n']} rows ({tot['m']} mojibake docs, "
+        return (
+            f"repaired {tot['n']} rows ({tot['m']} mojibake docs, "
             f"{tot['h']} hyphen breaks, {tot['b']} wraps reflowed) to {args.output}"
         )
-        return
-    if getattr(args, "spell_fix", False):
-        import re as _re
 
-        import pandas as pd
+    return out, summary
 
-        from .operators.bpe import word_freqs
-        from .operators.spellfix import spell_corrections
 
-        df = spark.read.parquet(args.input)
-        tc = args.text_col
-        if tc not in df.columns:
-            raise SystemExit(
-                f"pmocr-spark: --spell-fix: no column {tc!r} in {args.input}"
-            )
-        wfd = word_freqs(df.withColumnRenamed(tc, "text") if tc != "text" else df)
-        # the correction map is rare-vocab-bounded (Heaps law): the
-        # targets are freq<=2 words, so this collect is the same
-        # driver-small footprint as the BPE merge loop / PQ codebooks
-        mapping = {
-            r["wrong"]: r["corrected"] for r in spell_corrections(wfd).collect()
-        }
-        bmap = spark.sparkContext.broadcast(mapping)
-        word_re = _re.compile(r"\S+")
+def _spell_fix(spark, args, df):
+    import re
 
-        @F.pandas_udf("struct<fixed:string,n:long>")
-        def fix(texts):
-            m = bmap.value
+    import pandas as pd
+    from pyspark.sql import functions as F
 
-            def one(t):
-                if t is None:
-                    return {"fixed": None, "n": 0}
-                n = 0
+    from .operators.bpe import word_freqs
+    from .operators.spellfix import spell_corrections
 
-                def sub(match):
-                    nonlocal n
-                    rep = m.get(match.group(0).lower())
-                    if rep is None:
-                        return match.group(0)
-                    n += 1
-                    return rep
+    tc = args.text_col
+    wfd = word_freqs(_as_text(args, df))
+    # the correction map is rare-vocab-bounded (Heaps law): the targets
+    # are freq<=2 words, so this collect is the same driver-small
+    # footprint as the BPE merge loop / PQ codebooks
+    mapping = {r["wrong"]: r["corrected"] for r in spell_corrections(wfd).collect()}
+    bmap = spark.sparkContext.broadcast(mapping)
+    word_re = re.compile(r"\S+")
 
-                return {"fixed": word_re.sub(sub, t), "n": n}
+    @F.pandas_udf("struct<fixed:string,n:long>")
+    def fix(texts):
+        m = bmap.value
 
-            return pd.DataFrame([one(t) for t in texts])
+        def one(t):
+            if t is None:
+                return {"fixed": None, "n": 0}
+            n = 0
 
-        out = (
-            df.withColumn("_fx", fix(F.col(tc)))
-            .withColumn(tc, F.col("_fx.fixed"))
-            .withColumn("n_spellfixed", F.col("_fx.n"))
-            .drop("_fx")
-        )
-        out.write.mode("overwrite").parquet(args.output)
-        got = spark.read.parquet(args.output)
+            def sub(match):
+                nonlocal n
+                rep = m.get(match.group(0).lower())
+                if rep is None:
+                    return match.group(0)
+                n += 1
+                return rep
+
+            return {"fixed": word_re.sub(sub, t), "n": n}
+
+        return pd.DataFrame([one(t) for t in texts])
+
+    out = (
+        df.withColumn("_fx", fix(F.col(tc)))
+        .withColumn(tc, F.col("_fx.fixed"))
+        .withColumn("n_spellfixed", F.col("_fx.n"))
+        .drop("_fx")
+    )
+
+    def summary(got):
         tot = got.agg(
             F.coalesce(F.sum("n_spellfixed"), F.lit(0)).alias("f"),
             F.count("*").alias("n"),
         ).collect()[0]
-        print(
-            f"pmocr-spark: spell-fixed {tot['n']} rows ({tot['f']} tokens "
+        return (
+            f"spell-fixed {tot['n']} rows ({tot['f']} tokens "
             f"corrected, {len(mapping)} dictionary corrections) to {args.output}"
         )
-        return
-    if getattr(args, "keywords", None) is not None:
-        from .operators.keywords import tfidf_topk
 
-        df = spark.read.parquet(args.input)
-        tc = args.text_col
-        if "doc_id" not in df.columns or tc not in df.columns:
-            raise SystemExit(
-                f"pmocr-spark: --keywords: {args.input} needs (doc_id, {tc}) "
-                f"columns (columns: {df.columns}; --text-col overrides)"
-            )
-        docs = df.withColumnRenamed(tc, "text") if tc != "text" else df
-        tokens = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-        method = args.keyword_method or "tfidf"
-        if method == "rake":
-            from .operators.keywords import rake_topk
+    return out, summary
 
-            out = rake_topk(docs, tokens, k=args.keywords)
-        else:
-            out = tfidf_topk(docs, tokens, k=args.keywords)
-        out.write.mode("overwrite").parquet(args.output)
-        got = spark.read.parquet(args.output)
-        agg = got.agg(
-            F.count("*").alias("n"),
-            F.countDistinct("doc_id").alias("d"),
-        ).collect()[0]
-        print(
-            f"pmocr-spark: extracted top-{args.keywords} {method} keywords "
+
+def _tokens():
+    from pyspark.sql import functions as F
+
+    return F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+
+
+def _keywords(spark, args, df):
+    from pyspark.sql import functions as F
+
+    from .operators import keywords
+
+    method = args.keyword_method or "tfidf"
+    topk = keywords.rake_topk if method == "rake" else keywords.tfidf_topk
+    out = topk(_as_text(args, df), _tokens(), k=args.keywords)
+
+    def summary(got):
+        agg = got.agg(F.count("*").alias("n"), F.countDistinct("doc_id").alias("d")).collect()[0]
+        return (
+            f"extracted top-{args.keywords} {method} keywords "
             f"for {agg['d']} docs ({agg['n']} rows) to {args.output}"
         )
-        return
-    if getattr(args, "collocations", None) is not None:
-        from .operators.corpus_stats import llr_topk, pmi_topk
 
-        df = spark.read.parquet(args.input)
-        tc = args.text_col
-        if tc not in df.columns:
-            raise SystemExit(
-                f"pmocr-spark: --collocations: {args.input} needs a {tc} "
-                f"column (columns: {df.columns}; --text-col overrides)"
-            )
-        docs = df.withColumnRenamed(tc, "text") if tc != "text" else df
-        toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-        n = F.size(toks)
-        bg_arr = F.zip_with(
-            F.slice(toks, 1, n - 1),
-            F.slice(toks, 2, n - 1),
-            lambda a, b: F.concat_ws(" ", a, b),
-        )
-        bgc = (
-            docs.select(F.explode(bg_arr).alias("bigram"))
-            .groupBy("bigram")
-            .agg(F.count("*").cast("long").alias("cnt"))
-        )
-        wf = (
-            docs.select(F.explode(toks).alias("word"))
-            .filter(F.length("word") > 0)
-            .groupBy("word")
-            .agg(F.count("*").cast("long").alias("freq"))
-        )
-        mc = 10 if args.colloc_min_count is None else args.colloc_min_count
-        pmi = pmi_topk(bgc, wf, k=args.collocations, min_count=mc).select(
-            F.lit("pmi").alias("method"),
-            "bigram",
-            "cnt",
-            F.col("pmi_micro").alias("score_micro"),
-        )
-        llr = llr_topk(bgc, k=args.collocations, min_count=mc).select(
-            F.lit("llr").alias("method"),
-            "bigram",
-            "cnt",
-            F.col("llr_micro").alias("score_micro"),
-        )
-        pmi.unionAll(llr).write.mode("overwrite").parquet(args.output)
-        got = spark.read.parquet(args.output)
-        agg = got.agg(
-            F.count("*").alias("n"), F.countDistinct("bigram").alias("b")
-        ).collect()[0]
-        print(
-            f"pmocr-spark: top-{args.collocations} collocations by pmi+llr "
+    return out, summary
+
+
+def _collocations(spark, args, df):
+    from pyspark.sql import functions as F
+
+    from .operators.corpus_stats import llr_topk, pmi_topk
+
+    docs = _as_text(args, df)
+    toks = _tokens()
+    n = F.size(toks)
+    bg_arr = F.zip_with(
+        F.slice(toks, 1, n - 1),
+        F.slice(toks, 2, n - 1),
+        lambda a, b: F.concat_ws(" ", a, b),
+    )
+    bgc = (
+        docs.select(F.explode(bg_arr).alias("bigram"))
+        .groupBy("bigram")
+        .agg(F.count("*").cast("long").alias("cnt"))
+    )
+    wf = (
+        docs.select(F.explode(toks).alias("word"))
+        .filter(F.length("word") > 0)
+        .groupBy("word")
+        .agg(F.count("*").cast("long").alias("freq"))
+    )
+    mc = 10 if args.colloc_min_count is None else args.colloc_min_count
+    pmi = pmi_topk(bgc, wf, k=args.collocations, min_count=mc).select(
+        F.lit("pmi").alias("method"), "bigram", "cnt", F.col("pmi_micro").alias("score_micro")
+    )
+    llr = llr_topk(bgc, k=args.collocations, min_count=mc).select(
+        F.lit("llr").alias("method"), "bigram", "cnt", F.col("llr_micro").alias("score_micro")
+    )
+
+    def summary(got):
+        agg = got.agg(F.count("*").alias("n"), F.countDistinct("bigram").alias("b")).collect()[0]
+        return (
+            f"top-{args.collocations} collocations by pmi+llr "
             f"({agg['n']} rows, {agg['b']} distinct bigrams, min_count {mc}) "
             f"to {args.output}"
         )
-        return
-    if getattr(args, "kwic", None) is not None:
-        from .operators.keywords import kwic as kwic_op
 
-        df = spark.read.parquet(args.input)
-        tc = args.text_col
-        if "doc_id" not in df.columns or tc not in df.columns:
-            raise SystemExit(
-                f"pmocr-spark: --kwic: {args.input} needs (doc_id, {tc}) "
-                f"columns (columns: {df.columns}; --text-col overrides)"
-            )
-        docs = df.withColumnRenamed(tc, "text") if tc != "text" else df
-        toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-        win = 2 if args.kwic_window is None else args.kwic_window
-        out = kwic_op(docs, toks, args.kwic.strip().lower(), window=win)
-        out.write.mode("overwrite").parquet(args.output)
-        got = spark.read.parquet(args.output)
-        agg = got.agg(
-            F.count("*").alias("n"), F.countDistinct("doc_id").alias("d")
-        ).collect()[0]
-        print(
-            f"pmocr-spark: {agg['n']} occurrences of '{args.kwic.strip().lower()}' "
+    return pmi.unionAll(llr), summary
+
+
+def _kwic(spark, args, df):
+    from pyspark.sql import functions as F
+
+    from .operators.keywords import kwic
+
+    term = args.kwic.strip().lower()
+    win = 2 if args.kwic_window is None else args.kwic_window
+    out = kwic(_as_text(args, df), _tokens(), term, window=win)
+
+    def summary(got):
+        agg = got.agg(F.count("*").alias("n"), F.countDistinct("doc_id").alias("d")).collect()[0]
+        return (
+            f"{agg['n']} occurrences of '{term}' "
             f"in {agg['d']} docs (window {win}) to {args.output}"
         )
-        return
-    if getattr(args, "srp_dedup", False):
-        from .operators.multimodal import srp_near_dup
 
-        emb = spark.read.parquet(args.input)
-        if "vec_id" not in emb.columns or "embedding" not in emb.columns:
-            raise SystemExit(
-                f"pmocr-spark: --srp-dedup: {args.input} needs "
-                f"(vec_id, embedding) columns (columns: {emb.columns})"
-            )
-        first = emb.select(F.size("embedding").alias("d")).first()
-        if first is None:
-            raise SystemExit(
-                f"pmocr-spark: --srp-dedup: {args.input} is empty"
-            )
-        vec = emb.select(
-            F.col("vec_id").cast("string").alias("media_ref"),
-            F.transform("embedding", lambda x: x.cast("double")).alias("e"),
-        )
-        pairs = srp_near_dup(
-            vec,
-            dim=int(first["d"]),
-            **(
-                {}
-                if args.phash_max_hamming is None
-                else {"max_hamming": args.phash_max_hamming}
-            ),
-        )
-        pairs.write.mode("overwrite").parquet(args.output)
-        n = spark.read.parquet(args.output).count()
-        print(f"pmocr-spark: {n} SRP embedding near-dup pairs written to {args.output}")
-        return
-    if getattr(args, "winnow_dedup", False):
-        from .operators.winnow import shared_fingerprint_pairs, winnow_fingerprints
+    return out, summary
 
-        docs = spark.read.parquet(args.input)
-        for c in ("doc_id", "text"):
-            if c not in docs.columns:
-                raise SystemExit(
-                    f"pmocr-spark: --winnow-dedup: {args.input} needs "
-                    f"(doc_id, text) columns (columns: {docs.columns})"
-                )
-        fps = winnow_fingerprints(docs)
-        # the fingerprint table IS the reusable artifact (the MOSS
-        # index); persist it next to the pairs so later probes skip
-        # re-winnowing the corpus
-        fps.write.mode("overwrite").parquet(f"{args.output}.fps")
-        fps = spark.read.parquet(f"{args.output}.fps")
-        min_shared = args.winnow_min_shared if args.winnow_min_shared is not None else 2
-        shared_fingerprint_pairs(fps, min_shared=min_shared).write.mode(
-            "overwrite"
-        ).parquet(args.output)
-        n = spark.read.parquet(args.output).count()
-        nf = fps.count()
-        print(
-            f"pmocr-spark: {nf} winnow fingerprints ({args.output}.fps); "
-            f"{n} match-candidate pairs (>= {min_shared} shared) written to "
-            f"{args.output}"
-        )
-        return
-    if getattr(args, "snm_dedup", False):
-        from pyspark.sql import functions as F
 
-        from .operators.dedup_index import ngram_rows
-        from .queries import _snm_candidates
+def _srp_dedup(spark, args, emb):
+    from pyspark.sql import functions as F
 
-        docs = spark.read.parquet(args.input)
-        for c in ("doc_id", "text"):
-            if c not in docs.columns:
-                raise SystemExit(
-                    f"pmocr-spark: --snm-dedup: {args.input} needs "
-                    f"(doc_id, text) columns (columns: {docs.columns})"
-                )
-        w = args.snm_window if args.snm_window is not None else 4
-        floor = (
-            args.snm_min_jaccard if args.snm_min_jaccard is not None else 0.05
-        )
-        toks = F.split(F.lower(F.trim("text")), r"\s+")
-        eligible = docs.filter(F.size(toks) >= 3)
-        keyed = eligible.select(
-            "doc_id", F.concat_ws(" ", F.slice(toks, 1, 3)).alias("k")
-        )
-        cand = _snm_candidates(keyed, w=w)
-        if (args.snm_passes or 1) == 2:
-            # multi-pass merge/purge: an INDEPENDENT sort on the
-            # last-3-token key catches pairs whose corrupted prefix
-            # defeated the first pass; candidate sets union, the
-            # verify below runs once over the union
-            keyed2 = eligible.select(
-                "doc_id", F.concat_ws(" ", F.slice(toks, -3, 3)).alias("k")
-            )
-            cand = cand.unionAll(_snm_candidates(keyed2, w=w)).distinct()
-        # exact shingle-Jaccard verify on candidates only (the q17
-        # lsh_verified shape: candidate-doc semi-join BEFORE the
-        # distinct shuffle)
-        cdocs = (
-            cand.select(F.col("doc_a").alias("doc_id"))
-            .unionAll(cand.select(F.col("doc_b").alias("doc_id")))
-            .distinct()
-        )
-        sh = (
-            ngram_rows(docs.filter(F.size(toks) >= 3), 3, "shingle")
-            .join(cdocs, "doc_id", "left_semi")
-            .distinct()
-        )
-        sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-        inter = (
-            cand.join(sh.select(F.col("doc_id").alias("doc_a"), "shingle"), "doc_a")
-            .join(sh.select(F.col("doc_id").alias("doc_b"), "shingle"),
-                  ["doc_b", "shingle"])
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count("*").alias("inter"))
-        )
-        jac = F.col("inter") / (F.col("sza") + F.col("szb") - F.col("inter"))
-        pairs = (
-            inter.join(sizes.select(F.col("doc_id").alias("doc_a"),
-                                    F.col("sz").alias("sza")), "doc_a")
-            .join(sizes.select(F.col("doc_id").alias("doc_b"),
-                               F.col("sz").alias("szb")), "doc_b")
-            .filter(jac >= floor)
-            .select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard"))
-        )
-        pairs.write.mode("overwrite").parquet(args.output)
-        n = spark.read.parquet(args.output).count()
-        print(
-            f"pmocr-spark: {n} sorted-neighborhood dedup pairs "
-            f"(window {w}, jaccard >= {floor}) written to {args.output}"
-        )
-        return
-    if getattr(args, "compress_postings", False):
-        from pyspark.sql import functions as F
+    from .operators.multimodal import srp_near_dup
 
-        from .operators.postings import decode_postings, encode_postings
+    first = emb.select(F.size("embedding").alias("d")).first()
+    if first is None:
+        raise SystemExit(f"pmocr-spark: --srp-dedup: {args.input} is empty")
+    vec = emb.select(
+        F.col("vec_id").cast("string").alias("media_ref"),
+        F.transform("embedding", lambda x: x.cast("double")).alias("e"),
+    )
+    h = args.phash_max_hamming
+    pairs = srp_near_dup(vec, dim=int(first["d"]), **({} if h is None else {"max_hamming": h}))
+    return pairs, lambda got: (
+        f"{got.count()} SRP embedding near-dup pairs written to {args.output}"
+    )
 
-        docs = spark.read.parquet(args.input)
-        for c in ("doc_id", "text"):
-            if c not in docs.columns:
-                raise SystemExit(
-                    f"pmocr-spark: --compress-postings: {args.input} needs "
-                    f"(doc_id, text) columns (columns: {docs.columns})"
-                )
-        encode_postings(docs).write.mode("overwrite").parquet(args.output)
-        index = spark.read.parquet(args.output)
+
+def _winnow_dedup(spark, args, docs):
+    from .operators.winnow import shared_fingerprint_pairs, winnow_fingerprints
+
+    # the fingerprint table IS the reusable artifact (the MOSS index);
+    # persist it next to the pairs so later probes skip re-winnowing the
+    # corpus
+    winnow_fingerprints(docs).write.mode("overwrite").parquet(f"{args.output}.fps")
+    fps = spark.read.parquet(f"{args.output}.fps")
+    min_shared = args.winnow_min_shared if args.winnow_min_shared is not None else 2
+    return shared_fingerprint_pairs(fps, min_shared=min_shared), lambda got: (
+        f"{fps.count()} winnow fingerprints ({args.output}.fps); "
+        f"{got.count()} match-candidate pairs (>= {min_shared} shared) written to "
+        f"{args.output}"
+    )
+
+
+def _snm_dedup(spark, args, docs):
+    from pyspark.sql import functions as F
+
+    from .operators.dedup_index import ngram_rows
+    from .queries import _snm_candidates
+
+    w = args.snm_window if args.snm_window is not None else 4
+    floor = args.snm_min_jaccard if args.snm_min_jaccard is not None else 0.05
+    toks = _tokens()
+    eligible = docs.filter(F.size(toks) >= 3)
+    keyed = eligible.select("doc_id", F.concat_ws(" ", F.slice(toks, 1, 3)).alias("k"))
+    cand = _snm_candidates(keyed, w=w)
+    if (args.snm_passes or 1) == 2:
+        # multi-pass merge/purge: an INDEPENDENT sort on the last-3-token
+        # key catches pairs whose corrupted prefix defeated the first
+        # pass; candidate sets union, the verify below runs once over
+        # the union
+        keyed2 = eligible.select("doc_id", F.concat_ws(" ", F.slice(toks, -3, 3)).alias("k"))
+        cand = cand.unionAll(_snm_candidates(keyed2, w=w)).distinct()
+    # exact shingle-Jaccard verify on candidates only (the q17
+    # lsh_verified shape: candidate-doc semi-join BEFORE the distinct
+    # shuffle)
+    cdocs = (
+        cand.select(F.col("doc_a").alias("doc_id"))
+        .unionAll(cand.select(F.col("doc_b").alias("doc_id")))
+        .distinct()
+    )
+    sh = ngram_rows(eligible, 3, "shingle").join(cdocs, "doc_id", "left_semi").distinct()
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
+    inter = (
+        cand.join(sh.select(F.col("doc_id").alias("doc_a"), "shingle"), "doc_a")
+        .join(sh.select(F.col("doc_id").alias("doc_b"), "shingle"), ["doc_b", "shingle"])
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count("*").alias("inter"))
+    )
+    jac = F.col("inter") / (F.col("sza") + F.col("szb") - F.col("inter"))
+    pairs = (
+        inter.join(sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sza")), "doc_a")
+        .join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("szb")), "doc_b")
+        .filter(jac >= floor)
+        .select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard"))
+    )
+    return pairs, lambda got: (
+        f"{got.count()} sorted-neighborhood dedup pairs "
+        f"(window {w}, jaccard >= {floor}) written to {args.output}"
+    )
+
+
+def _compress_postings(spark, args, docs):
+    from pyspark.sql import functions as F
+
+    from .operators.postings import decode_postings, encode_postings
+
+    def summary(index):
         agg = index.agg(
             F.coalesce(F.sum("n_postings"), F.lit(0)).alias("np"),
             F.coalesce(F.sum(F.length("payload")), F.lit(0)).alias("nb"),
@@ -2671,442 +2320,174 @@ def main(argv: list[str] | None = None) -> None:
             )
         raw = agg.np * 8
         ratio = (agg.nb / raw) if raw else 0.0
-        print(
-            f"pmocr-spark: {agg.np} postings -> {agg.nb} payload bytes "
+        return (
+            f"{agg.np} postings -> {agg.nb} payload bytes "
             f"({ratio:.3f}x of raw 8-byte ids; decode round-trip ok) "
             f"written to {args.output}"
         )
-        return
-    if getattr(args, "summarize", False):
-        from .operators.textrank import top_sentences
 
-        docs = spark.read.parquet(args.input)
-        for c in ("doc_id", "text"):
-            if c not in docs.columns:
-                raise SystemExit(
-                    f"pmocr-spark: --summarize: {args.input} needs "
-                    f"(doc_id, text) columns (columns: {docs.columns})"
-                )
-        k = args.summary_k if args.summary_k is not None else 2
-        top_sentences(docs, k=k).write.mode("overwrite").parquet(args.output)
-        out = spark.read.parquet(args.output)
-        n, nd = out.count(), out.select("doc_id").distinct().count()
-        print(
-            f"pmocr-spark: {n} summary sentences (top-{k}) over {nd} docs "
-            f"written to {args.output}"
-        )
-        return
-    if getattr(args, "optimize_layout", None):
-        from .operators.zorder import optimize_layout
+    return encode_postings(docs), summary
 
-        col_a, col_b = [c.strip() for c in args.optimize_layout.split(",")]
-        df = spark.read.parquet(args.input)
-        for c in (col_a, col_b):
-            if c not in df.columns:
-                raise SystemExit(
-                    f"pmocr-spark: --optimize-layout: no column {c!r} in {args.input}"
-                )
-            if df.schema[c].dataType.simpleString() not in (
-                "tinyint", "smallint", "int", "bigint"
-            ):
-                raise SystemExit(
-                    f"pmocr-spark: --optimize-layout: column {c!r} is "
-                    f"{df.schema[c].dataType.simpleString()}; z-ordering needs an "
-                    "integer column (cast dates/timestamps to epoch first)"
-                )
-        n_files = args.layout_files if args.layout_files is not None else 16
-        optimize_layout(df, col_a, col_b, n_files=n_files).write.mode(
-            "overwrite"
-        ).parquet(args.output)
-        n = spark.read.parquet(args.output).count()
-        print(
-            f"pmocr-spark: z-ordered {n} rows on ({col_a}, {col_b}) into "
-            f"{n_files} files at {args.output}"
-        )
-        return
-    if getattr(args, "compact_output", False):
-        import math
-        import os
-        from urllib.parse import urlparse
 
-        df = spark.read.option("recursiveFileLookup", "true").parquet(args.input)
-        in_files = df.inputFiles()
-        # size the output from the INPUT bytes (compression ratio is
-        # preserved by a rewrite of the same rows); at cluster scale
-        # the FS listing already carries sizes — locally, stat them
-        total = 0
-        for f in in_files:
-            p = urlparse(f).path
-            if os.path.exists(p):
-                total += os.path.getsize(p)
-        target_mb = args.target_file_mb if args.target_file_mb is not None else 128
-        n_files = max(1, math.ceil(total / (target_mb * 1024 * 1024)))
-        # deterministic row->file assignment: hash-repartition + sort
-        # on the leading key column (the WET-sink discipline), so a
-        # re-run compacts identically and downstream diffs are clean
-        key = df.columns[0]
-        (
-            df.repartition(n_files, F.col(key))
-            .sortWithinPartitions(key)
-            .write.mode("overwrite")
-            .parquet(args.output)
-        )
-        n = spark.read.parquet(args.output).count()
-        print(
-            f"pmocr-spark: compacted {len(in_files)} files "
-            f"({total / 1048576:.1f} MB) into {n_files} at {args.output} "
-            f"({n} rows, key={key})"
-        )
-        return
-    if getattr(args, "extract_markdown", False):
-        import pandas as pd
+def _summarize(spark, args, docs):
+    from .operators.textrank import top_sentences
 
-        from .operators import html_extract as hx
+    k = args.summary_k if args.summary_k is not None else 2
 
-        blobs = spark.read.parquet(args.blobs)
+    def summary(got):
+        n, nd = got.count(), got.select("doc_id").distinct().count()
+        return f"{n} summary sentences (top-{k}) over {nd} docs written to {args.output}"
 
-        schema = (
-            "media_ref string, markdown string, tables_json string, "
-            "n_blocks long, n_tables long"
-        )
+    return top_sentences(docs, k=k), summary
 
-        def conv(batches):
-            # iterator mapInPandas: constant memory however many blobs;
-            # non-HTML blobs skipped by the same content magic the fused
-            # pipeline UDF dispatches on. Tables ship as JSON (Arrow's
-            # pandas converter rejects triply-nested list columns);
-            # consumers re-structure with from_json('array<array<
-            # array<string>>>').
-            import json
 
-            for pdf in batches:
-                refs, mds, tbls, nb, nt = [], [], [], [], []
-                for ref, blob in zip(pdf["media_ref"], pdf["content"]):
-                    if blob is None or not hx.sniff_html(bytes(blob)):
-                        continue
-                    try:
-                        doc = bytes(blob).decode("utf-8")
-                    except UnicodeDecodeError:
-                        continue
-                    md = hx.to_markdown(doc)
-                    tables = hx.extract_tables(doc)
-                    refs.append(ref)
-                    mds.append(md)
-                    tbls.append(json.dumps(tables))
-                    nb.append(len([b for b in md.split("\n\n") if b]))
-                    nt.append(len(tables))
-                yield pd.DataFrame(
-                    {
-                        "media_ref": refs,
-                        "markdown": mds,
-                        "tables_json": tbls,
-                        "n_blocks": nb,
-                        "n_tables": nt,
-                    }
-                )
+def _train_quality(spark, args, docs):
+    from .operators import quality_classifier as qc_op
 
-        out = blobs.select("media_ref", "content").mapInPandas(conv, schema)
-        out.write.mode("overwrite").parquet(args.output)
-        n = spark.read.parquet(args.output).count()
-        print(
-            f"pmocr-spark: extracted markdown for {n} html blobs to {args.output}"
-        )
-        return
-    if getattr(args, "word_boxes", False):
-        import pandas as pd
+    model, _z = qc_op.train_quality_classifier(docs)
+    qc_op.write_model(spark, args.output, model)
+    return (
+        f"trained quality model on {model['n_train']} docs "
+        f"({model['iters']} iterations) to {args.output}"
+    )
 
-        from . import codecs
 
-        blobs = spark.read.parquet(args.blobs)
-        as_hocr = bool(getattr(args, "hocr", False))
-        as_tables = bool(getattr(args, "tables", False))
-        as_layout = bool(getattr(args, "layout", False))
+def _score_quality(spark, args, docs):
+    from pyspark.sql import functions as F
 
-        if as_layout:
-            schema = (
-                "media_ref string, block_no long, n_lines long, "
-                "text string, error string"
-            )
-        elif as_hocr:
-            schema = "media_ref string, hocr string, n_words long, error string"
-        elif as_tables:
-            schema = (
-                "media_ref string, block_no long, row_no long, col_no long, "
-                "cell string, x0 long, y0 long, x1 long, y1 long, error string"
-            )
-        else:
-            schema = (
-                "media_ref string, line_no long, word_no long, word string, "
-                "x0 long, y0 long, x1 long, y1 long, error string"
-            )
+    from .operators import quality_classifier as qc_op
 
-        def boxes(batches):
-            # iterator mapInPandas: constant memory; only image/pdf
-            # containers are OCR-able layout sources (audio/html/video
-            # skipped by the same magic dispatch the fused UDF uses);
-            # undecodable image blobs become one error row each — the
-            # engine's error-as-data discipline, never a lost blob.
-            for pdf in batches:
-                rows = []
-                for ref, blob in zip(pdf["media_ref"], pdf["content"]):
-                    if blob is None:
-                        continue
-                    b = bytes(blob)
-                    if b[:6] not in (codecs.IMG_MAGIC, codecs.PDF_MAGIC):
-                        continue
-                    try:
-                        if as_layout:
-                            for bno, btxt in enumerate(codecs.recognize_regions(b)):
-                                rows.append(
-                                    (ref, bno, btxt.count("\n") + 1, btxt, None)
-                                )
-                        elif as_tables:
-                            # per COLUMN BLOCK: detect_table's whitespace
-                            # channels are only meaningful inside one
-                            # block's coordinate frame — a two-column
-                            # page is two independent tables
-                            for bno, (bws, _n) in enumerate(
-                                codecs.recognize_words_blocks(b)
-                            ):
-                                for rn, cn, cell, x0, x1, y0, y1 in (
-                                    codecs.detect_table(bws)
-                                ):
-                                    rows.append(
-                                        (ref, bno, rn, cn, cell, x0, y0, x1, y1, None)
-                                    )
-                        elif as_hocr:
-                            ws = codecs.recognize_words(b)
-                            rows.append(
-                                (ref, codecs.to_hocr(ws, page_id=ref), len(ws), None)
-                            )
-                        else:
-                            for ln, wn, w, x0, y0, x1, y1 in codecs.recognize_words(b):
-                                rows.append((ref, ln, wn, w, x0, y0, x1, y1, None))
-                    # broad catch, same as the fused UDF (udfs.py): a
-                    # magic-valid blob with a torn header raises raw
-                    # struct.error from rasterize, and error-as-data
-                    # means NO exception may kill the task
-                    except Exception as e:  # noqa: BLE001
-                        if as_layout:
-                            rows.append((ref, -1, -1, None, str(e)))
-                        elif as_hocr:
-                            rows.append((ref, None, -1, str(e)))
-                        elif as_tables:
-                            rows.append(
-                                (ref, -1, -1, -1, None, -1, -1, -1, -1, str(e))
-                            )
-                        else:
-                            rows.append((ref, -1, -1, None, -1, -1, -1, -1, str(e)))
-                if as_layout:
-                    cols = ["media_ref", "block_no", "n_lines", "text", "error"]
-                elif as_hocr:
-                    cols = ["media_ref", "hocr", "n_words", "error"]
-                elif as_tables:
-                    cols = [
-                        "media_ref", "block_no", "row_no", "col_no", "cell",
-                        "x0", "y0", "x1", "y1", "error",
-                    ]
-                else:
-                    cols = [
-                        "media_ref", "line_no", "word_no", "word",
-                        "x0", "y0", "x1", "y1", "error",
-                    ]
-                yield pd.DataFrame(rows, columns=cols)
+    model = qc_op.read_model(spark, args.score_quality)
+    # idempotent over its own output (the --encode-bpe discipline)
+    scores = qc_op.score_with_model(docs, model)
+    out = docs.drop("lr_quality", "keep_quality").join(scores, "doc_id")
 
-        out = blobs.select("media_ref", "content").mapInPandas(boxes, schema)
-        out.write.mode("overwrite").parquet(args.output)
-        got = spark.read.parquet(args.output)
-        n_ok = got.filter(F.col("error").isNull()).count()
-        n_err = got.filter(F.col("error").isNotNull()).count()
-        what = (
-            "layout blocks"
-            if as_layout
-            else "hOCR documents"
-            if as_hocr
-            else ("table cells" if as_tables else "word boxes")
-        )
-        print(
-            f"pmocr-spark: {n_ok} {what} "
-            f"({n_err} undecodable blobs as error rows) to {args.output}"
-        )
-        return
-    if getattr(args, "phash_dedup", False):
-        from .operators.multimodal import phash_near_dup
+    def summary(got):
+        stats = got.agg(F.count("*"), F.coalesce(F.sum("keep_quality"), F.lit(0))).first()
+        return f"scored {stats[0]} docs ({stats[1]} keep) to {args.output}"
 
-        blobs = spark.read.parquet(args.blobs)
-        pairs = phash_near_dup(
-            blobs,
-            **({} if args.phash_max_hamming is None else {"max_hamming": args.phash_max_hamming}),
-        )
-        pairs.write.mode("overwrite").parquet(args.output)
-        n = spark.read.parquet(args.output).count()
-        print(f"pmocr-spark: {n} visual near-dup pairs written to {args.output}")
-        return
-    if getattr(args, "afp_dedup", False):
-        from .operators.multimodal import audio_near_dup
+    return out, summary
 
-        blobs = spark.read.parquet(args.blobs)
-        pairs = audio_near_dup(
-            blobs,
-            **({} if args.phash_max_hamming is None else {"max_hamming": args.phash_max_hamming}),
-        )
-        pairs.write.mode("overwrite").parquet(args.output)
-        n = spark.read.parquet(args.output).count()
-        print(f"pmocr-spark: {n} audio near-dup pairs written to {args.output}")
-        return
-    if getattr(args, "train_quality", False):
-        from .operators import quality_classifier as qc_op
 
-        docs = spark.read.parquet(args.input)
-        if "text" not in docs.columns:
-            raise SystemExit(
-                f"--train-quality: {args.input} has no 'text' column (columns: "
-                f"{docs.columns}) — quality modes read a FLAT documents table; "
-                "extract span tables to txt first (--batch --targets txt)"
-            )
-        model, _z = qc_op.train_quality_classifier(docs)
-        qc_op.write_model(spark, args.output, model)
-        print(
-            f"pmocr-spark: trained quality model on {model['n_train']} docs "
-            f"({model['iters']} iterations) to {args.output}"
-        )
-        return
-    if getattr(args, "score_quality", None):
-        from .operators import quality_classifier as qc_op
+def _train_bpe(spark, args, docs):
+    from .operators import bpe as bpe_op
 
-        model = qc_op.read_model(spark, args.score_quality)
-        docs = spark.read.parquet(args.input)
-        if "text" not in docs.columns:
-            raise SystemExit(
-                f"--score-quality: {args.input} has no 'text' column (columns: "
-                f"{docs.columns}) — quality modes read a FLAT documents table; "
-                "extract span tables to txt first (--batch --targets txt)"
-            )
-        # idempotent over its own output (the --encode-bpe discipline)
-        scores = qc_op.score_with_model(docs, model)
-        out = docs.drop("lr_quality", "keep_quality").join(scores, "doc_id")
-        out.write.mode("overwrite").parquet(args.output)
-        stats = spark.read.parquet(args.output).agg(
-            F.count("*"), F.coalesce(F.sum("keep_quality"), F.lit(0))
-        ).first()
-        print(
-            f"pmocr-spark: scored {stats[0]} docs ({stats[1]} keep) to "
-            f"{args.output}"
-        )
-        return
-    if getattr(args, "train_bpe", None) is not None:
-        from .operators import bpe as bpe_op
+    min_count = args.bpe_min_count or bpe_op.DEFAULT_MIN_COUNT
+    merges = bpe_op.learn_bpe(docs, args.train_bpe, min_count=min_count)
+    bpe_op.write_model(spark, args.output, merges, min_count=min_count)
+    return f"learned {len(merges)} BPE merges (requested {args.train_bpe}) to {args.output}"
 
-        min_count = args.bpe_min_count or bpe_op.DEFAULT_MIN_COUNT
-        docs = spark.read.parquet(args.input)
-        if "text" not in docs.columns:
-            raise SystemExit(
-                f"--train-bpe: {args.input} has no 'text' column (columns: "
-                f"{docs.columns}) — BPE modes read a FLAT documents table; "
-                "extract span tables to txt first (--batch --targets txt)"
-            )
-        merges = bpe_op.learn_bpe(docs, args.train_bpe, min_count=min_count)
-        bpe_op.write_model(spark, args.output, merges, min_count=min_count)
-        print(
-            f"pmocr-spark: learned {len(merges)} BPE merges "
-            f"(requested {args.train_bpe}) to {args.output}"
-        )
-        return
-    if getattr(args, "encode_bpe", None):
-        from .operators import bpe as bpe_op
 
-        merges = bpe_op.read_model(spark, args.encode_bpe)
-        docs = spark.read.parquet(args.input)
-        if "text" not in docs.columns:
-            raise SystemExit(
-                f"--encode-bpe: {args.input} has no 'text' column (columns: "
-                f"{docs.columns}) — BPE modes read a FLAT documents table; "
-                "extract span tables to txt first (--batch --targets txt)"
-            )
-        # drop pre-existing token columns so the mode is idempotent over
-        # its own output (same discipline as --dedup-substrings)
-        out = (
-            docs.drop("bpe_tokens", "n_bpe_tokens")
-            .withColumn("bpe_tokens", bpe_op.encode_udf(merges)(F.col("text")))
-            .withColumn("n_bpe_tokens", F.size("bpe_tokens").cast("long"))
-        )
-        out.write.mode("overwrite").parquet(args.output)
-        n = spark.read.parquet(args.output).agg(
-            F.coalesce(F.sum("n_bpe_tokens"), F.lit(0)), F.count("*")
-        ).first()
-        print(
-            f"pmocr-spark: encoded {n[1]} docs ({n[0]} BPE tokens, "
-            f"{len(merges)}-merge model) to {args.output}"
-        )
-        return
-    if getattr(args, "warc_cdx", False):
-        from .sources.warc import read_warc_records, warc_cdx
+def _train_unigram(spark, args, docs):
+    from .operators import unigram_lm as uni_op
 
-        idx = warc_cdx(read_warc_records(spark, args.input))
-        idx.write.mode("overwrite").parquet(args.output)
-        n = spark.read.parquet(args.output).count()
-        print(f"pmocr-spark: cdx index of {n} records written to {args.output}")
-        return
-    if getattr(args, "extract_links", False):
-        from .operators.linkgraph import edges_from_html
+    model = uni_op.train_unigram(docs, args.train_unigram)
+    uni_op.write_model(spark, args.output, model, args.train_unigram)
+    return (
+        f"trained {len(model)}-piece unigram-LM tokenizer "
+        f"(requested {args.train_unigram}) to {args.output}"
+    )
 
-        blobs = spark.read.parquet(args.blobs)
-        edges = edges_from_html(blobs)
-        edges.write.mode("overwrite").parquet(args.output)
-        n = spark.read.parquet(args.output).count()
-        print(f"pmocr-spark: extracted {n} host-level link edges to {args.output}")
-        return
-    if getattr(args, "eval_extraction", None):
+
+def _encode_tokens(dest: str, module: str, prefix: str, label: str, unit: str):
+    """--encode-bpe / --encode-unigram: tokenize the text column with the
+    operators.<module> model dir at args.<dest> into <prefix>_tokens +
+    n_<prefix>_tokens. The token columns are dropped first, so the mode
+    is idempotent over its own output (same discipline as
+    --dedup-substrings)."""
+
+    def run(spark, args, docs):
+        from importlib import import_module
+
         from pyspark.sql import functions as F
 
-        from .operators.extraction_eval import (
-            edit_eval,
-            micro_scores,
-            rate_micro,
-            token_eval,
+        op = import_module(f".operators.{module}", __package__)
+        model = op.read_model(spark, getattr(args, dest))
+        toks, n_toks = f"{prefix}_tokens", f"n_{prefix}_tokens"
+        out = (
+            docs.drop(toks, n_toks)
+            .withColumn(toks, op.encode_udf(model)(F.col("text")))
+            .withColumn(n_toks, F.size(toks).cast("long"))
         )
 
-        ext = spark.read.parquet(args.input)
-        tc = args.text_col
-        if "doc_id" not in ext.columns or tc not in ext.columns:
-            raise SystemExit(
-                f"--eval-extraction: {args.input} needs (doc_id, {tc}) "
-                f"columns (columns: {ext.columns}; --text-col overrides)"
+        def summary(got):
+            n = got.agg(F.coalesce(F.sum(n_toks), F.lit(0)), F.count("*")).first()
+            return (
+                f"encoded {n[1]} docs ({n[0]} {label} tokens, "
+                f"{len(model)}-{unit} model) to {args.output}"
             )
-        gold = spark.read.parquet(args.eval_extraction)
-        if "doc_id" not in gold.columns or "text" not in gold.columns:
-            raise SystemExit(
-                f"--eval-extraction: {args.eval_extraction} needs "
-                f"(doc_id, text) columns (columns: {gold.columns})"
-            )
-        # LEFT join from gold: gold docs the pipeline never extracted
-        # score recall 0 (the honest eval convention) instead of
-        # silently dropping out of the average
-        pairs = gold.select("doc_id", F.col("text").alias("_gold")).join(
-            ext.select("doc_id", F.coalesce(F.col(tc), F.lit("")).alias("_ext")),
-            "doc_id",
-            "left",
-        ).withColumn("_ext", F.coalesce(F.col("_ext"), F.lit("")))
-        s = pairs.select(
-            "doc_id",
-            token_eval(F.col("_gold"), F.col("_ext")).alias("s"),
-            edit_eval(F.col("_gold"), F.col("_ext")).alias("w"),
-            F.levenshtein("_gold", "_ext").cast("long").alias("cdist"),
-            F.length("_gold").cast("long").alias("n_gold_c"),
-        ).select(
-            "doc_id", "s.tp", "s.n_gold", "s.n_ext",
-            "w.wdist", "w.n_gold_w", "cdist", "n_gold_c",
+
+        return out, summary
+
+    return run
+
+
+def _dedup_substrings(spark, args, docs):
+    from pyspark.sql import functions as F
+
+    from .operators.substring_dedup import DEFAULT_K, substring_dedup
+
+    k = args.substr_k or DEFAULT_K
+    cleaned = substring_dedup(docs, k=k)
+    # cleaned corpus keeps every non-text column; text is replaced by the
+    # deduped reconstruction (doc_id equi-join, one shuffle). Drop any
+    # pre-existing stat columns from the passthrough side so the mode is
+    # idempotent over its own output (re-running with a different k must
+    # overwrite, not COLUMN_ALREADY_EXISTS-crash on, the previous pass's
+    # stats).
+    out = docs.drop("text", "new_text", "n_words", "n_kept", "n_removed").join(
+        cleaned.withColumnRenamed("new_text", "text"), "doc_id"
+    )
+
+    def summary(got):
+        n = got.agg(F.sum("n_removed"), F.count("*")).first()
+        return (
+            f"substring dedup (k={k}) wrote {n[1]} docs to "
+            f"{args.output}, {n[0]} duplicated words removed"
         )
-        prec, rec, f1 = micro_scores(F.col("tp"), F.col("n_gold"), F.col("n_ext"))
-        scored = s.select(
-            "doc_id", "tp", "n_gold", "n_ext",
-            prec.alias("prec_micro"), rec.alias("rec_micro"), f1.alias("f1_micro"),
-            "cdist", "n_gold_c", "wdist", "n_gold_w",
-            rate_micro(F.col("cdist"), F.col("n_gold_c")).alias("cer_micro"),
-            rate_micro(F.col("wdist"), F.col("n_gold_w")).alias("wer_micro"),
+
+    return out, summary
+
+
+def _eval_extraction(spark, args, ext):
+    from pyspark.sql import functions as F
+
+    from .operators.extraction_eval import edit_eval, micro_scores, rate_micro, token_eval
+
+    gold = spark.read.parquet(args.eval_extraction)
+    if "doc_id" not in gold.columns or "text" not in gold.columns:
+        raise SystemExit(
+            f"--eval-extraction: {args.eval_extraction} needs "
+            f"(doc_id, text) columns (columns: {gold.columns})"
         )
-        scored.write.mode("overwrite").parquet(args.output)
-        res = spark.read.parquet(args.output)
+    # LEFT join from gold: gold docs the pipeline never extracted score
+    # recall 0 (the honest eval convention) instead of silently dropping
+    # out of the average
+    pairs = gold.select("doc_id", F.col("text").alias("_gold")).join(
+        ext.select("doc_id", F.coalesce(F.col(args.text_col), F.lit("")).alias("_ext")),
+        "doc_id",
+        "left",
+    ).withColumn("_ext", F.coalesce(F.col("_ext"), F.lit("")))
+    s = pairs.select(
+        "doc_id",
+        token_eval(F.col("_gold"), F.col("_ext")).alias("s"),
+        edit_eval(F.col("_gold"), F.col("_ext")).alias("w"),
+        F.levenshtein("_gold", "_ext").cast("long").alias("cdist"),
+        F.length("_gold").cast("long").alias("n_gold_c"),
+    ).select(
+        "doc_id", "s.tp", "s.n_gold", "s.n_ext",
+        "w.wdist", "w.n_gold_w", "cdist", "n_gold_c",
+    )
+    prec, rec, f1 = micro_scores(F.col("tp"), F.col("n_gold"), F.col("n_ext"))
+    scored = s.select(
+        "doc_id", "tp", "n_gold", "n_ext",
+        prec.alias("prec_micro"), rec.alias("rec_micro"), f1.alias("f1_micro"),
+        "cdist", "n_gold_c", "wdist", "n_gold_w",
+        rate_micro(F.col("cdist"), F.col("n_gold_c")).alias("cer_micro"),
+        rate_micro(F.col("wdist"), F.col("n_gold_w")).alias("wer_micro"),
+    )
+
+    def summary(res):
         agg = res.agg(
             F.count("*").alias("n"),
             F.sum("tp").alias("tp"),
@@ -3122,283 +2503,255 @@ def main(argv: list[str] | None = None) -> None:
         micro_r = (agg["tp"] or 0) * 1000000 // agg["ng"] if agg["ng"] else 0
         cer = (agg["cd"] or 0) * 1000000 // agg["ngc"] if agg["ngc"] else 0
         wer = (agg["wd"] or 0) * 1000000 // agg["ngw"] if agg["ngw"] else 0
-        print(
-            f"pmocr-spark: evaluated {agg['n']} docs -> {args.output}; "
+        return (
+            f"evaluated {agg['n']} docs -> {args.output}; "
             f"micro P={micro_p / 10000:.2f}% R={micro_r / 10000:.2f}%, "
             f"macro F1={(agg['macro_f1'] or 0) / 10000:.2f}%, "
             f"CER={cer / 10000:.2f}% WER={wer / 10000:.2f}%"
         )
-        return
-    if getattr(args, "robots_filter", None):
-        from pyspark.sql import functions as F
 
-        from .operators.robots import evaluate, rules_table
+    return scored, summary
 
-        urls = spark.read.parquet(args.input)
-        if "host" not in urls.columns or "path" not in urls.columns:
-            if "url" not in urls.columns:
-                raise SystemExit(
-                    f"--robots-filter: {args.input} needs (host, path) "
-                    f"columns or a 'url' column (columns: {urls.columns})"
-                )
-            host_re = r"^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/@]*@)?([^/:?#]+)"
-            path_re = r"^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*([^#]*)"
-            raw_path = F.regexp_extract("url", path_re, 1)
-            urls = urls.withColumn(
-                "host", F.lower(F.regexp_extract("url", host_re, 1))
-            ).withColumn(
-                "path", F.when(raw_path == "", F.lit("/")).otherwise(raw_path)
-            )
-        robots = spark.read.parquet(args.robots_filter)
-        missing = [c for c in ("host", "content") if c not in robots.columns]
-        if missing:
+
+# ---------------------------------------------------------------- web / table modes
+
+
+def _warc_cdx(spark, args, _):
+    from .sources.warc import read_warc_records, warc_cdx
+
+    idx = warc_cdx(read_warc_records(spark, args.input))
+    return idx, lambda got: f"cdx index of {got.count()} records written to {args.output}"
+
+
+def _robots_filter(spark, args, urls):
+    from pyspark.sql import functions as F
+
+    from .operators.robots import evaluate, rules_table
+
+    if "host" not in urls.columns or "path" not in urls.columns:
+        if "url" not in urls.columns:
             raise SystemExit(
-                f"--robots-filter: {args.robots_filter} lacks column(s) "
-                f"{missing}; expected a robots.txt blob table (host, content)"
+                f"--robots-filter: {args.input} needs (host, path) "
+                f"columns or a 'url' column (columns: {urls.columns})"
             )
-        agent = args.robots_agent or "*"
-        out = evaluate(urls, rules_table(robots, agent=agent))
-        out.write.mode("overwrite").parquet(args.output)
-        res = spark.read.parquet(args.output)
+        host_re = r"^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/@]*@)?([^/:?#]+)"
+        path_re = r"^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*([^#]*)"
+        raw_path = F.regexp_extract("url", path_re, 1)
+        urls = urls.withColumn(
+            "host", F.lower(F.regexp_extract("url", host_re, 1))
+        ).withColumn("path", F.when(raw_path == "", F.lit("/")).otherwise(raw_path))
+    robots = spark.read.parquet(args.robots_filter)
+    missing = [c for c in ("host", "content") if c not in robots.columns]
+    if missing:
+        raise SystemExit(
+            f"--robots-filter: {args.robots_filter} lacks column(s) "
+            f"{missing}; expected a robots.txt blob table (host, content)"
+        )
+    agent = args.robots_agent or "*"
+
+    def summary(res):
         n = res.count()
         n_ok = res.filter(F.col("allowed") == 1).count()
-        print(
-            f"pmocr-spark: robots-filtered {n} urls for agent '{agent}': "
+        return (
+            f"robots-filtered {n} urls for agent '{agent}': "
             f"{n_ok} allowed, {n - n_ok} disallowed -> {args.output}"
         )
-        return
-    if getattr(args, "pagerank", False):
-        from .operators.linkgraph import pagerank as pr_op
 
-        edges = spark.read.parquet(args.input)
-        missing = [c for c in ("src", "dst") if c not in edges.columns]
-        if missing:
-            raise SystemExit(
-                f"--pagerank: {args.input} lacks column(s) {missing}; "
-                "expected an edges table (src, dst) — build one with "
-                "--extract-links"
-            )
-        iters = args.pr_iters or 10
-        ranks = pr_op(edges, iters=iters)
-        ranks.write.mode("overwrite").parquet(args.output)
-        n = spark.read.parquet(args.output).count()
-        print(
-            f"pmocr-spark: pagerank ({iters} iters) over {n} hosts "
-            f"written to {args.output}"
-        )
-        return
-    if getattr(args, "train_unigram", None) is not None:
-        from .operators import unigram_lm as uni_op
+    return evaluate(urls, rules_table(robots, agent=agent)), summary
 
-        docs = spark.read.parquet(args.input)
-        if "text" not in docs.columns:
-            raise SystemExit(
-                f"--train-unigram: {args.input} has no 'text' column (columns: "
-                f"{docs.columns}) — tokenizer modes read a FLAT documents "
-                "table; extract span tables to txt first (--batch --targets txt)"
-            )
-        model = uni_op.train_unigram(docs, args.train_unigram)
-        uni_op.write_model(spark, args.output, model, args.train_unigram)
-        print(
-            f"pmocr-spark: trained {len(model)}-piece unigram-LM tokenizer "
-            f"(requested {args.train_unigram}) to {args.output}"
-        )
-        return
-    if getattr(args, "encode_unigram", None):
-        from .operators import unigram_lm as uni_op
 
-        model = uni_op.read_model(spark, args.encode_unigram)
-        docs = spark.read.parquet(args.input)
-        if "text" not in docs.columns:
-            raise SystemExit(
-                f"--encode-unigram: {args.input} has no 'text' column (columns: "
-                f"{docs.columns}) — tokenizer modes read a FLAT documents "
-                "table; extract span tables to txt first (--batch --targets txt)"
-            )
-        out = (
-            docs.drop("uni_tokens", "n_uni_tokens")
-            .withColumn("uni_tokens", uni_op.encode_udf(model)(F.col("text")))
-            .withColumn("n_uni_tokens", F.size("uni_tokens").cast("long"))
-        )
-        out.write.mode("overwrite").parquet(args.output)
-        n = spark.read.parquet(args.output).agg(
-            F.coalesce(F.sum("n_uni_tokens"), F.lit(0)), F.count("*")
-        ).first()
-        print(
-            f"pmocr-spark: encoded {n[1]} docs ({n[0]} unigram tokens, "
-            f"{len(model)}-piece model) to {args.output}"
-        )
-        return
-    if getattr(args, "dedup_substrings", False):
-        from .operators.substring_dedup import DEFAULT_K, substring_dedup
+def _pagerank(spark, args, edges):
+    from .operators.linkgraph import pagerank
 
-        k = args.substr_k or DEFAULT_K
-        docs = spark.read.parquet(args.input)
-        cleaned = substring_dedup(docs, k=k)
-        # cleaned corpus keeps every non-text column; text is replaced
-        # by the deduped reconstruction (doc_id equi-join, one shuffle).
-        # Drop any pre-existing stat columns from the passthrough side so
-        # the mode is idempotent over its own output (re-running with a
-        # different k must overwrite, not COLUMN_ALREADY_EXISTS-crash on,
-        # the previous pass's stats).
-        out = docs.drop("text", "new_text", "n_words", "n_kept", "n_removed").join(
-            cleaned.withColumnRenamed("new_text", "text"), "doc_id"
-        )
-        out.write.mode("overwrite").parquet(args.output)
-        n = spark.read.parquet(args.output).agg(
-            F.sum("n_removed"), F.count("*")
-        ).first()
-        print(
-            f"pmocr-spark: substring dedup (k={k}) wrote {n[1]} docs to "
-            f"{args.output}, {n[0]} duplicated words removed"
-        )
-        return
-    job_ts = args.job_ts.replace("T", " ").replace("Z", "")
-    suffix = "" if args.no_suffix else args.suffix
-
-    if args.service:
-        if getattr(args, "input_format", "parquet") == "warc":
-            # the streaming file source has no whole-file binary format;
-            # crawl shards are a bounded-batch input by nature (a crawl
-            # is finished before it ships) — loud error over silent
-            # misread, the engines.py missing-dependency discipline
-            raise SystemExit(
-                "pmocr-spark: --input-format warc is batch-only; "
-                "run batch mode over the shard directory"
-            )
-        if getattr(args, "input_format", "parquet") == "jsonl":
-            from .sources.jsonl import read_blobs_jsonl
-
-            blobs = read_blobs_jsonl(spark, args.blobs)
-        elif getattr(args, "input_format", "parquet") == "orc":
-            blobs = spark.read.orc(args.blobs)
-        else:
-            blobs = spark.read.parquet(args.blobs)
-        # default: poller interval parity (INOTIFY_POLLER_INTERVAL,
-        # default.conf:33); --once: W4 reconciliation pass that drains
-        # the landing dir(s) and terminates
-        trigger = {"availableNow": True} if args.once else {"processingTime": "30 seconds"}
-        queries = launch_monitors(
-            spark, args, blobs, job_ts, suffix, trigger=trigger, ocr_udf=ocr_udf
-        )
-        # all queries run concurrently; blocking on each in turn = block
-        # until every monitor stops (pmOCR parks in its sleep loop while
-        # the per-dir OCR_service subshells run, pmocr.sh:2540-2544)
-        for _name, q in queries:
-            q.awaitTermination()
-        return
-
-    if args.raw:
-        from .sources.binary import lift_to_documents, read_media_dir
-
-        blobs = read_media_dir(spark, args.raw)
-        docs = lift_to_documents(blobs)
-    elif getattr(args, "input_format", "parquet") == "warc":
-        from .sources.warc import read_warc_records, warc_to_documents
-
-        docs, blobs = warc_to_documents(read_warc_records(spark, args.input))
-    elif getattr(args, "input_format", "parquet") == "jsonl":
-        from .sources.jsonl import read_blobs_jsonl, read_documents_jsonl
-
-        docs = read_documents_jsonl(spark, args.input)
-        blobs = read_blobs_jsonl(spark, args.blobs)
-    elif getattr(args, "input_format", "parquet") == "orc":
-        docs = spark.read.orc(args.input)
-        blobs = spark.read.orc(args.blobs)
-    else:
-        docs = spark.read.parquet(args.input)
-        blobs = spark.read.parquet(args.blobs)
-    lineage = ckpt.read_checkpoint(spark, args.lineage)
-    if lineage is not None:
-        # one scan for the warning + resume filter + retry-count lookup
-        lineage = lineage.persist()
-        # P2 retry runs on the deterministic job clock: if --job-ts does
-        # not advance past the last run's, failed docs stay postponed
-        # forever and retry-with-postponement silently never fires
-        import sys
-
-        last = lineage.agg(F.max("ts").alias("t")).collect()[0]["t"]
-        try:
-            job_dt = datetime.fromisoformat(job_ts)
-        except ValueError:
-            job_dt = None  # odd-but-castable format: skip the advisory
-        if last is not None and job_dt is not None and job_dt <= last:
-            print(
-                f"pmocr-spark: warning: --job-ts {job_ts!r} does not advance "
-                f"past the lineage's last run ({last}); failed docs remain "
-                "postponed — pass a later --job-ts to retry them",
-                file=sys.stderr,
-            )
-    results = pipeline.run_batch(
-        spark,
-        docs,
-        blobs,
-        checkpoint=lineage,
-        num_partitions=args.num_partitions,
-        broadcast_spans=(args.span_join != "shuffle"),
-        job_ts=job_ts,
-        ocr_udf=ocr_udf,
+    iters = args.pr_iters or 10
+    return pagerank(edges, iters=iters), lambda got: (
+        f"pagerank ({iters} iters) over {got.count()} hosts written to {args.output}"
     )
-    cached = results.persist()
-    # F7 output-name projection + Q1 multi-target fan-out (doc_id is
-    # unique, so F8 collision resolution is a no-op here; q06 exercises
-    # the windowed variant)
-    out = pipeline.project_targets(
-        cached, targets, job_ts, suffix=suffix, addition=args.filename_addition
+
+
+def _lsh_plan(_spark, args, _):
+    # pure driver-side arithmetic: no Spark session, instant
+    from .operators.lsh_plan import plan_bands
+
+    parts = [x.strip() for x in args.lsh_plan.split(",")]
+    if len(parts) < 2 or len(parts) > 4:
+        raise SystemExit("pmocr-spark: --lsh-plan wants N_HASHES,THRESHOLD[,FP_W[,FN_W]]")
+    try:
+        plan = plan_bands(
+            int(parts[0]),
+            float(parts[1]),
+            fp_weight=float(parts[2]) if len(parts) > 2 else 1.0,
+            fn_weight=float(parts[3]) if len(parts) > 3 else 1.0,
+        )
+    except ValueError as e:
+        raise SystemExit(f"pmocr-spark: --lsh-plan: {e}")
+    print(json.dumps(plan))
+
+
+def _optimize_layout(spark, args, df):
+    from .operators.zorder import optimize_layout
+
+    col_a, col_b = [c.strip() for c in args.optimize_layout.split(",")]
+    for c in (col_a, col_b):
+        if c not in df.columns:
+            raise SystemExit(f"pmocr-spark: --optimize-layout: no column {c!r} in {args.input}")
+        if df.schema[c].dataType.simpleString() not in ("tinyint", "smallint", "int", "bigint"):
+            raise SystemExit(
+                f"pmocr-spark: --optimize-layout: column {c!r} is "
+                f"{df.schema[c].dataType.simpleString()}; z-ordering needs an "
+                "integer column (cast dates/timestamps to epoch first)"
+            )
+    n_files = args.layout_files if args.layout_files is not None else 16
+    return optimize_layout(df, col_a, col_b, n_files=n_files), lambda got: (
+        f"z-ordered {got.count()} rows on ({col_a}, {col_b}) into "
+        f"{n_files} files at {args.output}"
     )
-    pcols = []
-    if args.partition_by:
-        pcols = [c.strip() for c in args.partition_by.split(",") if c.strip()]
-        missing = [c for c in pcols if c not in out.columns]
-        if missing:
-            raise SystemExit(
-                f"pmocr-spark: error: --partition-by column(s) {missing} not in "
-                f"the results table; available: {', '.join(out.columns)}"
-            )
-    if getattr(args, "output_format", "parquet") == "wet":
-        from .sources.warc import write_wet
 
-        if pcols:
-            raise SystemExit(
-                "pmocr-spark: --partition-by does not compose with "
-                "--output-format wet (shard layout is the format)"
-            )
-        if "txt" not in out.columns:
-            raise SystemExit(
-                "pmocr-spark: --output-format wet needs the txt target; "
-                "add txt to --targets"
-            )
-        # WET is the extracted-text artifact: done docs only (failures
-        # and skips live in lineage, exactly like CommonCrawl's WET
-        # files carry successful conversions only)
-        write_wet(out.filter(F.col("status") == "done"), args.output, job_ts=job_ts)
-    elif getattr(args, "output_format", "parquet") == "jsonl":
-        from .sources.jsonl import write_jsonl
 
-        write_jsonl(out, args.output, partition_by=pcols or None)
-    else:
-        writer = out.write.mode("append")
-        if pcols:
-            writer = writer.partitionBy(*pcols)
-        if getattr(args, "output_format", "parquet") == "orc":
-            writer.orc(args.output)
-        else:
-            writer.parquet(args.output)
-    rows = ckpt.checkpoint_rows(cached, run_id=args.run_id, job_ts=job_ts, prior=lineage)
-    ckpt.append_checkpoint(rows, args.lineage)
-    cached.unpersist()
-    if lineage is not None:
-        lineage.unpersist()
-    if args.metrics:
-        # re-read AFTER the append so the report covers this run too;
-        # overwrite — the report is a derived view of the lineage table
-        full = ckpt.read_checkpoint(spark, args.lineage)
-        ckpt.partition_metrics(full).write.mode("overwrite").parquet(args.metrics)
-    if args.compact_lineage:
-        # after metrics: the per-run partition report needs the full
-        # history; compaction keeps only each doc's winning row
-        ckpt.compact_checkpoint(spark, args.lineage)
+def _compact_output(spark, args, _):
+    import math
+    import os
+    from urllib.parse import urlparse
 
+    from pyspark.sql import functions as F
+
+    df = spark.read.option("recursiveFileLookup", "true").parquet(args.input)
+    in_files = df.inputFiles()
+    # size the output from the INPUT bytes (compression ratio is
+    # preserved by a rewrite of the same rows); at cluster scale the FS
+    # listing already carries sizes — locally, stat them
+    total = 0
+    for f in in_files:
+        p = urlparse(f).path
+        if os.path.exists(p):
+            total += os.path.getsize(p)
+    target_mb = args.target_file_mb if args.target_file_mb is not None else 128
+    n_files = max(1, math.ceil(total / (target_mb * 1024 * 1024)))
+    # deterministic row->file assignment: hash-repartition + sort on the
+    # leading key column (the WET-sink discipline), so a re-run compacts
+    # identically and downstream diffs are clean
+    key = df.columns[0]
+    out = df.repartition(n_files, F.col(key)).sortWithinPartitions(key)
+    return out, lambda got: (
+        f"compacted {len(in_files)} files "
+        f"({total / 1048576:.1f} MB) into {n_files} at {args.output} "
+        f"({got.count()} rows, key={key})"
+    )
+
+
+# ---------------------------------------------------------------- the table
+
+_IO = ("input", "output")
+_BLOBS = ("blobs", "output")
+_PIPELINE = (
+    "targets", "run_id", "job_ts", "suffix", "no_suffix", "filename_addition",
+    "delete_input", "skip_txt_pdf", "metrics", "engine", "num_partitions",
+    "span_join", "input_format",
+)  # fmt: skip
+_EMB = ("vec_id", "embedding")
+_DOCS = ("doc_id", "text")
+_HAMMING = _within("phash_max_hamming", 0, 64)
+
+# fmt: off
+MODES: tuple[Mode, ...] = (
+    Mode("--batch", _run_batch, prepare=_check_pipeline,
+         owns=_PIPELINE + ("raw", "compact_lineage", "output_format", "partition_by")),
+    Mode("--service", _run_service, prepare=_check_pipeline,
+         owns=_PIPELINE + ("monitor", "once", "dedup_index", "dedup_substrings_index",
+                           "alerts", "stream_checkpoint")),
+    Mode("--compact-lineage", _compact_lineage, needs=("lineage",)),
+    Mode("--build-dedup-index", _build_dedup_index, needs=("input",), reads="input"),
+    Mode("--probe-dedup-index", _probe_dedup_index, needs=_IO, reads="input",
+         owns=("probe_broadcast",)),
+    Mode("--merge-dedup-index", _merge_dedup_index, needs=("input",), reads="input"),
+    Mode("--compact-dedup-index", _compact_dedup_index),
+    Mode("--build-pq-index", _build_pq_index, needs=("input",), reads="input", cols=_EMB,
+         owns=("train_codebook",), checks=(_at_least("train_codebook", 1, " ITERS"),)),
+    Mode("--append-pq-index", _append_pq_index, needs=("input",), reads="input", cols=_EMB),
+    Mode("--probe-pq-index", _probe_pq_index, needs=_IO, reads="input", cols=_EMB,
+         owns=("rerank_vectors", "pq_topk", "ivf_nprobe"),
+         checks=(_at_least("pq_topk", 1), _at_least("ivf_nprobe", 1))),
+    Mode("--build-text-index", _text_index("build"), needs=("input",), reads="input"),
+    Mode("--append-text-index", _text_index("append"), needs=("input",), reads="input"),
+    Mode("--search-text", _search_text, needs=("query", "output"),
+         owns=("query", "max_df", "search_topk"),
+         checks=(_at_least("search_topk", 1),
+                 (lambda a: a.max_df is None or 0 < a.max_df <= 1, "--max-df must be in (0, 1]"))),
+    Mode("--search-phrase", _search_phrase, needs=_IO, reads="input", cols=("doc_id", TEXT),
+         owns=("search_topk",), checks=(_at_least("search_topk", 1),)),
+    Mode("--build-bloom-index", _build_bloom_index, needs=("input",), reads="input",
+         owns=("bloom_m", "bloom_k", "bloom_key_col"),
+         checks=(_at_least("bloom_m", 2), _at_least("bloom_k", 1))),
+    Mode("--append-bloom-index", _append_bloom_index, needs=("input",), reads="input",
+         owns=("bloom_key_col",)),
+    Mode("--probe-bloom-index", _probe_bloom_index, needs=_IO, reads="input",
+         owns=("bloom_key_col",)),
+    Mode("--compact-bloom-index", _compact_bloom_index),
+    Mode("--compact-substr-index", _compact_substr_index),
+    Mode("--phash-dedup", _near_dup("visual", "phash_near_dup"), needs=_BLOBS, reads="blobs",
+         owns=("phash_max_hamming",), checks=(_HAMMING,)),
+    Mode("--afp-dedup", _near_dup("audio", "audio_near_dup"), needs=_BLOBS, reads="blobs",
+         owns=("phash_max_hamming",), checks=(_HAMMING,)),
+    Mode("--srp-dedup", _srp_dedup, needs=_IO, reads="input", cols=_EMB,
+         owns=("phash_max_hamming",), checks=(_HAMMING,)),
+    Mode("--transcribe-audio", _transcribe("audio"), needs=_BLOBS, reads="blobs"),
+    Mode("--transcribe-video", _transcribe("video"), needs=_BLOBS, reads="blobs"),
+    Mode("--audit-blobs", _audit_blobs, needs=_BLOBS, reads="blobs"),
+    Mode("--extract-markdown", _extract_markdown, needs=_BLOBS, reads="blobs"),
+    Mode("--word-boxes", _word_boxes, needs=_BLOBS, reads="blobs",
+         owns=("hocr", "tables", "layout"),
+         checks=((lambda a: a.hocr + a.tables + a.layout <= 1,
+                  "--tables, --hocr and --layout are mutually exclusive outputs"),)),
+    Mode("--extract-links", _extract_links, needs=_BLOBS, reads="blobs"),
+    Mode("--corpus-stats", _corpus_stats, needs=_IO, reads="input", cols=("text",)),
+    Mode("--fix-text", _fix_text, needs=_IO, reads="input", cols=(TEXT,)),
+    Mode("--spell-fix", _spell_fix, needs=_IO, reads="input", cols=(TEXT,)),
+    Mode("--keywords", _keywords, needs=_IO, reads="input", cols=("doc_id", TEXT),
+         owns=("keyword_method",), checks=(_at_least("keywords", 1, " K"),)),
+    Mode("--collocations", _collocations, needs=_IO, reads="input", cols=(TEXT,),
+         owns=("colloc_min_count",),
+         checks=(_at_least("collocations", 1, " K"), _at_least("colloc_min_count", 1))),
+    Mode("--kwic", _kwic, needs=_IO, reads="input", cols=("doc_id", TEXT),
+         owns=("kwic_window",),
+         checks=((lambda a: a.kwic.strip(), "--kwic TERM must be non-empty"),
+                 _at_least("kwic_window", 0))),
+    Mode("--winnow-dedup", _winnow_dedup, needs=_IO, reads="input", cols=_DOCS,
+         owns=("winnow_min_shared",), checks=(_at_least("winnow_min_shared", 1),)),
+    Mode("--snm-dedup", _snm_dedup, needs=_IO, reads="input", cols=_DOCS,
+         owns=("snm_window", "snm_min_jaccard", "snm_passes"),
+         checks=(_at_least("snm_window", 2), _within("snm_min_jaccard", 0, 1))),
+    Mode("--compress-postings", _compress_postings, needs=_IO, reads="input", cols=_DOCS),
+    Mode("--summarize", _summarize, needs=_IO, reads="input", cols=_DOCS,
+         owns=("summary_k",), checks=(_at_least("summary_k", 1),)),
+    Mode("--train-quality", _train_quality, needs=_IO, reads="input", cols=("text",)),
+    Mode("--score-quality", _score_quality, needs=_IO, reads="input", cols=("text",)),
+    Mode("--train-bpe", _train_bpe, needs=_IO, reads="input", cols=("text",),
+         owns=("bpe_min_count",),
+         checks=(_at_least("train_bpe", 1, " merges"), _at_least("bpe_min_count", 1))),
+    Mode("--encode-bpe", _encode_tokens("encode_bpe", "bpe", "bpe", "BPE", "merge"),
+         needs=_IO, reads="input", cols=("text",)),
+    Mode("--train-unigram", _train_unigram, needs=_IO, reads="input", cols=("text",),
+         checks=(_at_least("train_unigram", 1, " VOCAB_SIZE"),)),
+    Mode("--encode-unigram",
+         _encode_tokens("encode_unigram", "unigram_lm", "uni", "unigram", "piece"),
+         needs=_IO, reads="input", cols=("text",)),
+    Mode("--dedup-substrings", _dedup_substrings, needs=_IO, reads="input",
+         owns=("substr_k",), checks=(_at_least("substr_k", 2),)),
+    Mode("--eval-extraction", _eval_extraction, needs=_IO, reads="input", cols=("doc_id", TEXT)),
+    Mode("--warc-cdx", _warc_cdx, needs=_IO),
+    Mode("--robots-filter", _robots_filter, needs=_IO, reads="input", owns=("robots_agent",)),
+    Mode("--pagerank", _pagerank, needs=_IO, reads="input", cols=("src", "dst"),
+         owns=("pr_iters",), checks=(_at_least("pr_iters", 1),)),
+    Mode("--lsh-plan", _lsh_plan, session=False),
+    Mode("--optimize-layout", _optimize_layout, needs=_IO, reads="input",
+         owns=("layout_files",),
+         checks=((lambda a: len([c for c in a.optimize_layout.split(",") if c.strip()]) == 2,
+                  "--optimize-layout wants exactly two columns: COL_A,COL_B"),
+                 _at_least("layout_files", 1))),
+    Mode("--compact-output", _compact_output, needs=_IO, owns=("target_file_mb",),
+         checks=(_at_least("target_file_mb", 1),)),
+)
+# fmt: on
 
 if __name__ == "__main__":
     main()

@@ -29,7 +29,6 @@ from __future__ import annotations
 
 import struct
 import zlib
-from dataclasses import dataclass
 
 import numpy as np
 
@@ -763,13 +762,6 @@ def recognize_block(bands: list[np.ndarray]) -> list[str]:
     return out
 
 
-def recognize_line(band: np.ndarray) -> str:
-    """M3b — decode one GLYPH_H-row band back to characters (the
-    single-line view of recognize_block)."""
-    out = recognize_block([band])
-    return out[0] if out else ""
-
-
 def recognize_words(blob: bytes) -> list[tuple[int, int, str, int, int, int, int]]:
     """M3c — hOCR-style word geometry: decode a media blob and report
     every word with its bounding box in integer pixel coordinates.
@@ -1045,14 +1037,3 @@ def csv_hack(text: str) -> str:
     import re
 
     return re.sub("  +", ";", text)
-
-
-# ---------------------------------------------------------------- dataclass
-
-
-@dataclass(frozen=True)
-class DecodedSpan:
-    order: int
-    kind: str            # always 'text' post-OCR
-    text: str
-    media_ref: str | None  # provenance for OCRed spans, None for passthrough

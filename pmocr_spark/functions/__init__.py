@@ -22,11 +22,6 @@ def strip_quotes(col) -> Column:
     return F.regexp_replace(col, "^['\"]|['\"]$", "")
 
 
-def escape_spaces(col) -> Column:
-    """X2 — EscapeSpaces (pmocr.sh:1260): backslash-escape spaces."""
-    return F.regexp_replace(col, " ", r"\\ ")
-
-
 def url_encode(col) -> Column:
     """X3 — UrlEncode (pmocr.sh:1347-1358)."""
     return F.url_encode(col)

@@ -482,11 +482,11 @@ def banded_hamming_pairs(
     key becomes (band, key, block_i, block_j): pair (a, b) meets in
     exactly one cell (block_i = g(a), block_j = g(b)), so the candidate
     set is IDENTICAL to the unsplit join (pinned by test) while the
-    per-task work drops to ~CAP². Cold buckets (the overwhelming
-    majority) take the original single-shuffle path via a broadcast
-    anti-join on the (tiny, frequency-capped-by-definition) hot-key
-    set; the only added cost is one map-side-combined (band, key) count
-    whose shuffle rows are 16-byte keys + counts."""
+    per-task work drops to ~CAP². Each member's bucket size comes from
+    a (band, key) window count that rides the self-join's own (band,
+    key) shuffle (no separate count aggregate, no hot-key join); cold
+    buckets (the overwhelming majority, count <= CAP) take the original
+    single-shuffle join, and only hot rows pay the extra block shuffle."""
     width = 64 // bands
     mask = (1 << width) - 1
     bandcol = F.explode(

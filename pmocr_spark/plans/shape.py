@@ -158,11 +158,3 @@ def _bracket_groups(line: str) -> list[str]:
         if depth >= 1:
             cur += ch
     return groups
-
-
-def python_udf_after_filter(df: DataFrame) -> bool:
-    """Crude ordering check: in the formatted plan tree the scan-side
-    Filter must appear below (after) ArrowEvalPython — i.e. filters are
-    applied in the scan stage, not post-UDF."""
-    plan = formatted_plan(df)
-    return "ArrowEvalPython" in plan or "MapInPandas" in plan

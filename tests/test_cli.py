@@ -1091,3 +1091,114 @@ def test_word_boxes_layout_mode(spark, tmp_path, capsys):
     with pytest.raises(SystemExit):
         cli.parse_args(["--word-boxes", "--layout", "--tables",
                         "--blobs", "b", "--output", "o"])
+
+
+# ---------------------------------------------------------------- mode table
+
+_IO = ["--input", "i", "--output", "o"]
+_BATCH = ["--batch", "--input", "i", "--blobs", "b", "--output", "o", "--lineage", "l"]
+_SERVICE = ["--service", "--input", "i", "--blobs", "b", "--output", "o", "--lineage", "l"]
+_PIPELINES = {"--batch": _BATCH, "--service": _SERVICE}
+_STANDALONE = [m for m in cli.MODES if m.flag not in _PIPELINES]
+#: options no mode owns: paths, the config file, the master and the
+#: text column are shared by every mode, so shared job configs work
+_GLOBAL = {"help", "config", "input", "blobs", "output", "lineage", "master", "text_col"}
+
+
+def _trigger(mode) -> list[str]:
+    """The mode's trigger flag with a value that passes its range checks."""
+    action = {a.dest: a for a in cli.build_parser()._actions}[mode.dest]
+    if action.nargs == 0:
+        return [mode.flag]
+    return [mode.flag, "3" if action.type is int else "a,b"]
+
+
+def _paths(dests) -> list[str]:
+    return [arg for d in dests for arg in (f"--{d.replace('_', '-')}", "x")]
+
+
+@pytest.mark.parametrize(
+    "argv",
+    [
+        _BATCH + ["--pq-topk", "5"],
+        _BATCH + ["--substr-k", "5"],
+        _BATCH + ["--phash-max-hamming", "3"],
+        ["--kwic", "foo", *_IO, "--pq-topk", "5"],
+        ["--spell-fix", *_IO, "--phash-max-hamming", "3"],
+        ["--corpus-stats", *_IO, "--input-format", "jsonl"],
+        ["--summarize", *_IO, "--output-format", "orc"],
+    ],
+)
+def test_stray_mode_flag_rejected(capsys, argv):
+    """A knob set outside every mode that owns it fails loudly instead
+    of being silently dropped."""
+    with pytest.raises(SystemExit):
+        cli.parse_args(argv)
+    assert "only applies to" in capsys.readouterr().err
+
+
+def test_stray_flag_from_config_rejected_default_value_accepted(tmp_path):
+    """'Set' means differs from the built-in default, whether from the
+    CLI or a config file; an option at its default is never stray."""
+    conf = tmp_path / "job.conf"
+    conf.write_text("pq_topk=5\n")
+    with pytest.raises(SystemExit):
+        cli.parse_args(["--config", str(conf), *_BATCH])
+    a = cli.parse_args(["--corpus-stats", *_IO, "--input-format", "parquet",
+                        "--targets", "txt", "--text-col", "txt"])
+    assert a.mode.flag == "--corpus-stats"
+
+
+def test_every_option_belongs_to_a_mode():
+    """No option outside the globals can be silently ignored: each is a
+    mode trigger or owned by at least one mode (batch/service included)."""
+    owned = {d for m in cli.MODES for d in (m.dest, *m.owns)}
+    dests = {a.dest for a in cli.build_parser()._actions}
+    assert dests - _GLOBAL - owned == set()
+
+
+@pytest.mark.parametrize("pipeline", sorted(_PIPELINES))
+@pytest.mark.parametrize("mode", _STANDALONE, ids=lambda m: m.flag)
+def test_mode_rejects_batch_and_service(capsys, mode, pipeline):
+    argv = _trigger(mode) + _paths(mode.needs) + _PIPELINES[pipeline]
+    owner = next(m for m in cli.MODES if m.flag == pipeline)
+    if mode.dest in owner.owns:  # --batch --compact-lineage: a batch knob
+        assert cli.parse_args(argv).mode is owner
+        return
+    with pytest.raises(SystemExit):
+        cli.parse_args(argv)
+    assert "separate modes" in capsys.readouterr().err
+
+
+@pytest.mark.parametrize("mode", _STANDALONE, ids=lambda m: m.flag)
+def test_mode_requires_each_path(capsys, mode):
+    assert cli.parse_args(_trigger(mode) + _paths(mode.needs)).mode is mode
+    for missing in mode.needs:
+        with pytest.raises(SystemExit):
+            cli.parse_args(_trigger(mode) + _paths(set(mode.needs) - {missing}))
+        assert "required with" in capsys.readouterr().err
+
+
+def test_cli_import_loads_no_spark_or_operators():
+    """Operators import inside each mode's run: importing the CLI loads
+    neither pyspark nor any operator, and --lsh-plan starts no Spark."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    code = (
+        "import json, sys\n"
+        "from pmocr_spark import cli\n"
+        "loaded = sorted(m for m in sys.modules if m.startswith(('pyspark', 'pmocr_spark')))\n"
+        "cli.main(['--lsh-plan', '128,0.5'])\n"
+        "print(json.dumps([loaded, 'pyspark' in sys.modules]))\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(cli.__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=repo, capture_output=True, text=True, check=True
+    ).stdout.splitlines()
+    assert json.loads(out[0])["bands"] >= 1  # the plan line
+    loaded, spark_loaded = json.loads(out[-1])
+    assert loaded == ["pmocr_spark", "pmocr_spark.cli"]
+    assert not spark_loaded
